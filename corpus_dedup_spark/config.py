@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -30,22 +30,12 @@ class DedupConfig:
     shingle_level: str = "unit"     # "unit" (sentence shingles) | "char" (char n-grams)
     char_ngram: int = 5
 
-    # MinHash / LSH
+    # MinHash / LSH (one-permutation MinHash with optimal densification —
+    # see functions.udfs._oph_signatures_from_shingle_sets)
     num_perm: int = 128
     lsh_bands: int = 32             # 32 bands x 4 rows: s-curve threshold ~0.42
     lsh_rows: int = 4
     minhash_seed: int = 1215752193  # any fixed odd-ish seed; drives (a, b) draws
-    # "oph": one-permutation hashing (Li et al. 2012) + hashed-permutation
-    # OPTIMAL densification (Shrivastava, ICML 2017) — one pass over the shingles
-    # instead of num_perm passes; ~10x less memory traffic (the classic scheme
-    # saturates the memory bus at high core counts). Rotation densification
-    # (Shrivastava & Li 2014) was measured here to correlate adjacent bins on
-    # sparse sets and inflate candidates 31x — see udfs._optimal_densify; it is
-    # used only as the probe-exhausted tail fallback. "classic":
-    # per-permutation multiply-shift minhash.
-    # Both are pure functions of the shingle set: identical sets ⇒ identical
-    # signatures, so the exact-duplicate floor holds under either scheme.
-    minhash_scheme: str = "oph"
 
     # candidate hygiene at scale
     max_bucket_size: int = 2000     # LSH buckets above this are sampled + logged (skew cap)
@@ -55,20 +45,14 @@ class DedupConfig:
     shuffle_partitions: int = 32
     salt_buckets: int = 8           # salting factor for hot-key repartitions
 
-    extra: dict = field(default_factory=dict, compare=False)
-
     def __post_init__(self):
         if self.mode not in ("sentence", "line", "paragraph", "document"):
             raise ValueError(f"bad mode {self.mode!r}")
         if self.lsh_bands * self.lsh_rows != self.num_perm:
             raise ValueError("lsh_bands * lsh_rows must equal num_perm")
-        if self.minhash_scheme not in ("oph", "classic"):
-            raise ValueError(f"bad minhash_scheme {self.minhash_scheme!r}")
 
     def config_hash(self) -> str:
-        d = asdict(self)
-        d.pop("extra", None)
-        blob = json.dumps(d, sort_keys=True).encode()
+        blob = json.dumps(asdict(self), sort_keys=True).encode()
         return hashlib.sha256(blob).hexdigest()[:16]
 
 

@@ -51,31 +51,6 @@ def make_extract_units_udf(mode: str = "sentence", max_length: int = 0):
 
 
 # ---------------------------------------------------------------------------
-# H1 — FNV-1a unit hashes (parity counters / shingle base hashes)
-# ---------------------------------------------------------------------------
-
-@pandas_udf(LongType())
-def fnv1a_udf(units: pd.Series) -> pd.Series:
-    """binary → int64 (bit-reinterpreted uint64 FNV-1a, ref src/hash_utils.c:3-10)."""
-    vals = kernel.fnv1a_many([_as_bytes(u) for u in units])
-    return pd.Series(vals.view(np.int64))
-
-
-@pandas_udf(ArrayType(LongType()))
-def unit_hashes_udf(unit_lists: pd.Series) -> pd.Series:
-    """array<binary> → array<int64> of per-unit FNV-1a hashes (one flat vectorized pass)."""
-    lists = [v if v is not None else [] for v in unit_lists]
-    counts = [len(v) for v in lists]
-    flat = [_as_bytes(u) for v in lists for u in v]
-    hashes = kernel.fnv1a_many(flat).view(np.int64)
-    out, pos = [], 0
-    for c in counts:
-        out.append(hashes[pos:pos + c])
-        pos += c
-    return pd.Series(out)
-
-
-# ---------------------------------------------------------------------------
 # H5 — shingling + batched MinHash signatures (north-rule extension)
 # ---------------------------------------------------------------------------
 
@@ -128,29 +103,6 @@ def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def _signatures_from_shingle_sets(shingle_sets: list[np.ndarray],
-                                  a_params: np.ndarray, b_params: np.ndarray,
-                                  num_perm: int) -> np.ndarray:
-    """Batched MinHash: one (S_total × P) numpy pass for a whole Arrow batch.
-    Empty sets get the max-uint64 sentinel signature."""
-    n = len(shingle_sets)
-    s_counts = np.fromiter((len(s) for s in shingle_sets), dtype=np.int64, count=n)
-    total = int(s_counts.sum())
-    out = np.full((n, num_perm), np.iinfo(np.uint64).max, dtype=_U64)
-    if total:
-        hs = np.concatenate([s for s in shingle_sets if len(s)])
-        starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(s_counts[:-1], out=starts[1:])
-        nonempty = s_counts > 0
-        ne_starts = starts[nonempty]
-        with np.errstate(over="ignore"):
-            for p0 in range(0, num_perm, 16):
-                p1 = min(p0 + 16, num_perm)
-                m = hs[:, None] * a_params[None, p0:p1] + b_params[None, p0:p1]
-                out[nonempty, p0:p1] = np.minimum.reduceat(m, ne_starts, axis=0)
-    return out.view(np.int64)
-
-
 def _oph_signatures_from_shingle_sets(shingle_sets: list[np.ndarray],
                                       a0: np.uint64, b0: np.uint64,
                                       num_perm: int) -> np.ndarray:
@@ -158,7 +110,8 @@ def _oph_signatures_from_shingle_sets(shingle_sets: list[np.ndarray],
     Shrivastava, "Optimal Densification for Fast and Accurate Minwise Hashing",
     ICML 2017).
 
-    ONE multiply-shift pass over all shingles (vs num_perm passes classically):
+    ONE multiply-shift pass over all shingles (vs num_perm passes for
+    per-permutation MinHash):
     each shingle is hashed once, assigned to bin ``h % num_perm``, and the bin
     keeps its minimum. Empty bins probe a sequence of OTHER bins chosen by fixed
     per-attempt permutations (functions of the bin index only, shared across all
@@ -169,8 +122,9 @@ def _oph_signatures_from_shingle_sets(shingle_sets: list[np.ndarray],
     sparse sets (~25 shingles in 128 bins): one shared shingle could light up an
     entire band and candidate pairs exploded 31x; hashed probing decorrelates the
     band rows. Pure function of the shingle set: identical sets ⇒ identical
-    signatures. Empty sets keep the all-max sentinel row, as in the classic
-    scheme."""
+    signatures. Empty sets keep the all-max sentinel row.
+
+    ``a0``/``b0`` are lane 0 of :func:`_perm_params`."""
     n = len(shingle_sets)
     P = num_perm
     MAX = np.iinfo(np.uint64).max
@@ -252,17 +206,6 @@ def _optimal_densify(mat: np.ndarray, mask: np.ndarray, C: np.uint64) -> np.ndar
     return dens.reshape(n, P)
 
 
-def _signatures(shingle_sets: list[np.ndarray], a_params: np.ndarray,
-                b_params: np.ndarray, cfg: DedupConfig) -> np.ndarray:
-    """Scheme dispatcher — see DedupConfig.minhash_scheme."""
-    if cfg.minhash_scheme == "oph":
-        return _oph_signatures_from_shingle_sets(
-            shingle_sets, a_params[0], b_params[0], cfg.num_perm)
-    return _signatures_from_shingle_sets(
-        shingle_sets, a_params, b_params, cfg.num_perm)
-
-
-
 def _shingle_sets_from_texts(raw: list[bytes], cfg: DedupConfig) -> list[np.ndarray]:
     """texts → per-doc sorted-unique shingle hash sets.
 
@@ -295,37 +238,6 @@ def _shingle_sets_from_texts(raw: list[bytes], cfg: DedupConfig) -> list[np.ndar
     return out
 
 
-def make_minhash_udf(cfg: DedupConfig):
-    """array<binary> units → array<int64> MinHash signature (num_perm values).
-
-    Identical unit lists ⇒ identical shingle sets ⇒ identical signatures, so exact
-    duplicates are caught with probability 1 (the reference's exact-dup semantics are a
-    floor under the LSH near-dup extension). Batched: one (S_total × P) numpy pass per
-    Arrow batch, multiply-shift permutations in native-wrapping uint64.
-    """
-    a_params, b_params = _perm_params(cfg)
-    num_perm = cfg.num_perm
-
-    @pandas_udf(ArrayType(LongType()))
-    def minhash_signature(unit_lists: pd.Series) -> pd.Series:
-        lists = [[_as_bytes(u) for u in (v if v is not None else [])]
-                 for v in unit_lists]
-        counts = [len(v) for v in lists]
-        flat = [u for v in lists for u in v]
-        uh = kernel.fnv1a_many(flat)
-        shingle_sets: list[np.ndarray] = []
-        pos = 0
-        # route through _doc_shingles so cfg.shingle_level is honored — signatures
-        # stay consistent with make_features_udf/make_shingle_set_udf shingle sets
-        for units, c in zip(lists, counts):
-            shingle_sets.append(_doc_shingles(units, uh[pos:pos + c], cfg))
-            pos += c
-        sig = _signatures(shingle_sets, a_params, b_params, cfg)
-        return pd.Series(list(sig))
-
-    return minhash_signature
-
-
 def make_features_udf(cfg: DedupConfig):
     """FUSED text → struct(shingles: binary, sig: binary): extraction, shingling and
     MinHash in ONE Arrow round-trip (three chained pandas UDFs cost 3× serialization
@@ -335,12 +247,14 @@ def make_features_udf(cfg: DedupConfig):
     the features table is persisted once and read by both the banding and the
     verify join, and block-manager caching of per-element arrays was measured at
     ~20 s for 200k rows (serialization per element) vs ~1 s for two binary cells.
-    Shingle blobs are sorted-unique u64; sig blobs are num_perm u64."""
+    Shingle blobs are sorted-unique u64; sig blobs are num_perm u64.
+
+    The near-dup leg itself uses :func:`make_band_features_udf`; this shape,
+    which emits the signature, serves the signature oracles and tests."""
     from pyspark.sql.types import StructField, StructType
 
     a_params, b_params = _perm_params(cfg)
-    num_perm = cfg.num_perm
-    mode, max_length = cfg.mode, cfg.max_length
+    a0, b0, num_perm = a_params[0], b_params[0], cfg.num_perm
     schema = StructType([
         StructField("shingles", BinaryType()),
         StructField("sig", BinaryType()),
@@ -350,7 +264,7 @@ def make_features_udf(cfg: DedupConfig):
     def features(texts: pd.Series) -> pd.DataFrame:
         shingle_sets = _shingle_sets_from_texts(
             [_as_bytes(t) for t in texts], cfg)
-        sig = _signatures(shingle_sets, a_params, b_params, cfg)
+        sig = _oph_signatures_from_shingle_sets(shingle_sets, a0, b0, num_perm)
         return pd.DataFrame({
             "shingles": [s.tobytes() for s in shingle_sets],
             "sig": [row.tobytes() for row in sig],
@@ -381,13 +295,12 @@ def make_band_features_udf(cfg: DedupConfig):
     the 128-value signature never leaves the worker (only the ~32 band hashes and
     the packed shingle blob are emitted), so the persisted features table is
     ~2.5× smaller than with an explicit sig column and banding needs no second
-    UDF pass. Identical semantics to make_features_udf + make_band_hashes_udf
-    (shared kernels)."""
+    UDF pass. Same shingle and signature kernels as make_features_udf."""
     from pyspark.sql.types import StructField, StructType
 
     a_params, b_params = _perm_params(cfg)
-    num_perm, bands, rows = cfg.num_perm, cfg.lsh_bands, cfg.lsh_rows
-    mode, max_length = cfg.mode, cfg.max_length
+    a0, b0, num_perm = a_params[0], b_params[0], cfg.num_perm
+    bands, rows = cfg.lsh_bands, cfg.lsh_rows
     schema = StructType([
         StructField("shingles", BinaryType()),
         StructField("bands", ArrayType(LongType())),
@@ -397,31 +310,20 @@ def make_band_features_udf(cfg: DedupConfig):
     def band_features(texts: pd.Series) -> pd.DataFrame:
         shingle_sets = _shingle_sets_from_texts(
             [_as_bytes(t) for t in texts], cfg)
-        sig = _signatures(shingle_sets, a_params, b_params, cfg).view(_U64)
+        sig = _oph_signatures_from_shingle_sets(
+            shingle_sets, a0, b0, num_perm).view(_U64)
         bh = _band_hashes_from_sig_matrix(sig, bands, rows)
         return pd.DataFrame({
             "shingles": [s.tobytes() for s in shingle_sets],
             "bands": list(bh),
         })
 
-    return band_features
-
-
-def make_band_hashes_udf(cfg: DedupConfig):
-    """binary signature blob (num_perm × u64) → array<int64> of lsh_bands band
-    hashes. One frombuffer+reshape per Arrow batch — no per-row parsing."""
-    bands, rows = cfg.lsh_bands, cfg.lsh_rows
-
-    @pandas_udf(ArrayType(LongType()))
-    def band_hashes(sigs: pd.Series) -> pd.Series:
-        if len(sigs) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.frombuffer(
-            b"".join(bytes(s) for s in sigs), dtype=_U64
-        ).reshape(len(sigs), bands * rows)
-        return pd.Series(list(_band_hashes_from_sig_matrix(mat, bands, rows)))
-
-    return band_hashes
+    # Pure, but a posexplode over ``bands`` makes Catalyst infer a
+    # ``size(bands) > 0`` filter and push it through the projection, which
+    # RE-EVALUATES a deterministic UDF below the one that feeds the explode
+    # (two ArrowEvalPython nodes on any un-persisted feature table — observed
+    # in the lsh_candidates plan). Non-deterministic pins it to one evaluation.
+    return band_features.asNondeterministic()
 
 
 # ---------------------------------------------------------------------------

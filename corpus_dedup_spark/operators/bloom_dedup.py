@@ -9,8 +9,9 @@ over the corpus keys:
 1. **build** — one pass over the corpus keys: hash JVM-side
    (``F.xxhash64``), set k bits per key in a per-partition numpy bitmap
    inside ``mapInArrow`` (no per-row Python) over a stream coalesced to a
-   BOUNDED partition count, then OR the ≤32 partial bitmaps incrementally on
-   the driver (``toLocalIterator`` — O(bitmap) driver residency). The bitmap
+   BOUNDED partition count, then OR the ≤32 partial bitmaps executor-side
+   (``RDD.treeReduce``) so only the one merged bitmap reaches the driver —
+   O(bitmap) driver residency. The bitmap
    is ~1.2 GB per 10⁹ keys at 1% fpp — small enough to broadcast, persist
    beside the state table, and UPDATE INCREMENTALLY (OR in each batch's
    bitmap) so steady-state runs never rescan the corpus to rebuild it.

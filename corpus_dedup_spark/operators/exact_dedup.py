@@ -18,23 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from corpus_dedup_spark.functions.udfs import make_extract_units_udf
-
-
-def explode_units(pages: DataFrame, mode: str = "sentence", max_length: int = 0,
-                  text_col: str = "text", id_col: str = "url") -> DataFrame:
-    """pages(id, text, ...) → units(id, unit_idx, norm_unit).
-
-    Column-prunes to (id, text) before the UDF so the scan never reads html/binary
-    payloads; posexplode preserves document order for the deterministic keeper rule.
-    Empty units are already dropped inside the kernel (P1/P2).
-    """
-    extract = make_extract_units_udf(mode, max_length)
-    return (
-        pages.select(id_col, text_col)
-        .select(id_col, F.posexplode(extract(F.col(text_col))).alias("unit_idx", "norm_unit"))
-    )
-
 
 def _binary_view(col):
     """Arrow string/binary Array → (values uint8 ndarray, starts, ends) without
@@ -64,16 +47,18 @@ def _binary_view(col):
 def explode_units_arrow(pages: DataFrame, mode: str = "sentence",
                         max_length: int = 0, text_col: str = "text",
                         id_col: str = "url") -> DataFrame:
-    """Flat-Arrow variant of :func:`explode_units` — same rows, same clean-window
-    wall clock (see SCALE.md), but ~14M fewer Python heap objects per 500k docs
-    and one fewer JVM stage.
+    """pages(id, text, ...) → units(id, unit_idx, norm_unit): one row per
+    normalized unit, ``unit_idx`` in document order (the keeper rule's tie
+    break). Empty units are already dropped inside the kernel (P1/P2); the
+    scan is pruned to (id, text) so it never reads html/binary payloads.
 
     ``mapInArrow`` hands the kernel a pyarrow RecordBatch and takes back value/
     offset buffers built directly by :func:`kernel.extract_units_batch_flat_arrow`:
     no per-unit OR per-document Python bytes objects (text enters the kernel as
     zero-copy buffer views — see :func:`_binary_view`), no JVM-side explode
     (rows leave the worker already flat), and the id column is carried by a C++
-    ``take`` gather. Bit-identical unit bytes and (id, unit_idx) pairs."""
+    ``take`` gather. Unit bytes are those of the scalar spec
+    :func:`kernel.extract_units`."""
     import numpy as np
     import pyarrow as pa
 
@@ -104,138 +89,6 @@ def explode_units_arrow(pages: DataFrame, mode: str = "sentence",
     id_type = dict(src.dtypes)[id_col]
     return src.mapInArrow(
         fn, schema=f"{id_col} {id_type}, unit_idx long, norm_unit binary")
-
-
-def keeper_partials_arrow(pages: DataFrame, mode: str = "sentence",
-                          max_length: int = 0, text_col: str = "text",
-                          id_col: str = "url") -> DataFrame:
-    """pages → PARTITION-LOCAL keeper partials (_h, norm_unit, id, unit_idx, n_occ)
-    in one mapInArrow pass: extract units (flat buffers, zero boxing) and collapse
-    every intra-partition duplicate BEFORE anything crosses Arrow or the shuffle
-    (kernel.combine_keepers_flat — one lexsort, no per-row Python).
-
-    Scale rationale (the reference's quirk Q2 per-file local set, distributed):
-    shuffle rows and Arrow transfer both shrink by the intra-partition duplication
-    factor — on boilerplate-heavy real crawls that factor dwarfs this synthetic
-    corpus's ~1.3x. ``_h`` is the unit's FNV-1a (computed once, vectorized) and
-    doubles as the downstream sort-comparator accelerator, replacing xxhash64.
-
-    Memory: the whole partition's unit buffers are held until flush (~= the
-    partition's text bytes, so bounded by spark.sql.files.maxPartitionBytes).
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    from corpus_dedup_spark import kernel
-
-    def fn(batches):
-        vals_chunks: list[np.ndarray] = []
-        uidx_chunks: list[np.ndarray] = []
-        url_chunks: list[pa.Array] = []
-        len_chunks: list[np.ndarray] = []
-        for rb in batches:
-            arr, starts, ends = _binary_view(rb.column(text_col))
-            doc_idx, unit_idx, values, offsets = (
-                kernel.extract_units_batch_flat_arrow(
-                    arr, starts, ends, mode, max_length))
-            if len(doc_idx) == 0:
-                continue
-            vals_chunks.append(np.asarray(values, dtype=np.uint8))
-            uidx_chunks.append(np.asarray(unit_idx, dtype=np.int64))
-            len_chunks.append(np.diff(np.asarray(offsets, dtype=np.int64)))
-            url_chunks.append(
-                rb.column(id_col).take(pa.array(doc_idx, type=pa.int64())))
-        if not vals_chunks:
-            return
-        values = (vals_chunks[0] if len(vals_chunks) == 1
-                  else np.concatenate(vals_chunks))
-        lengths = (len_chunks[0] if len(len_chunks) == 1
-                   else np.concatenate(len_chunks))
-        unit_idx = (uidx_chunks[0] if len(uidx_chunks) == 1
-                    else np.concatenate(uidx_chunks))
-        offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offsets[1:])
-        urls = pa.chunked_array(url_chunks).combine_chunks()
-        # first-wins ranks: UTF-8 byte order == codepoint order, so Python str
-        # sort of the dictionary matches Spark's binary string ordering; a
-        # NULL id ranks before everything (Spark's asc NULLS FIRST, so the
-        # switch stays drop-in for null-bearing ids — np.argsort would raise)
-        enc = urls.dictionary_encode()
-        keys = enc.dictionary.to_pylist()
-        dict_order = np.asarray(
-            sorted(range(len(keys)),
-                   # two Nones tie on element 0, so None is never ordered
-                   key=lambda i: (keys[i] is not None, keys[i])),
-            dtype=np.int64)
-        rank_of = np.empty(len(keys), dtype=np.int64)
-        rank_of[dict_order] = np.arange(len(keys), dtype=np.int64)
-        idx = enc.indices
-        if idx.null_count:  # a NULL id encodes as a null INDEX, not a key
-            idx_np = idx.fill_null(-1).to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            url_rank = np.where(idx_np < 0, np.int64(-1),
-                                rank_of[np.maximum(idx_np, 0)])
-        else:
-            url_rank = rank_of[idx.to_numpy(zero_copy_only=False)]
-        sel, n_occ, fnv = kernel.combine_keepers_flat(
-            values, offsets, url_rank, unit_idx)
-        # ragged gather of the keeper rows' bytes
-        out_lens = lengths[sel]
-        out_off = np.zeros(len(sel) + 1, dtype=np.int64)
-        np.cumsum(out_lens, out=out_off[1:])
-        total = int(out_off[-1])
-        out_vals = np.empty(total, dtype=np.uint8)
-        if total:
-            pos = np.arange(total, dtype=np.int64)
-            rel = pos - np.repeat(out_off[:-1], out_lens)
-            out_vals[pos] = values[np.repeat(offsets[:-1][sel], out_lens) + rel]
-        if out_off[-1] >= (1 << 31):  # not assert: must survive python -O
-            raise ValueError(
-                "partition keeper bytes exceed int32 offsets "
-                f"({int(out_off[-1])} bytes); repartition the input or lower "
-                "spark.sql.files.maxPartitionBytes")
-        units_arr = pa.Array.from_buffers(
-            pa.binary(), len(sel),
-            [None, pa.py_buffer(out_off.astype(np.int32)),
-             pa.py_buffer(out_vals)])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(fnv.view(np.int64), type=pa.int64()),
-             units_arr,
-             urls.take(pa.array(sel, type=pa.int64())),
-             pa.array(unit_idx[sel], type=pa.int64()),
-             pa.array(n_occ, type=pa.int64())],
-            names=["_h", "norm_unit", id_col, "unit_idx", "n_occ"])
-
-    src = pages.select(id_col, text_col)
-    id_type = dict(src.dtypes)[id_col]
-    return src.mapInArrow(
-        fn,
-        schema=(f"_h long, norm_unit binary, {id_col} {id_type}, "
-                "unit_idx long, n_occ long"))
-
-
-def dedup_keepers_combined(pages: DataFrame, mode: str = "sentence",
-                           max_length: int = 0, id_col: str = "url",
-                           text_col: str = "text") -> DataFrame:
-    """Keeper table via the fused extract+combine pass (:func:`keeper_partials_arrow`)
-    followed by one global merge agg — bit-identical rows to
-    ``dedup_keepers(explode_units_arrow(pages))``, with the shuffle input already
-    collapsed by the intra-partition duplication factor."""
-    partials = keeper_partials_arrow(pages, mode, max_length, text_col, id_col)
-    return (
-        partials.withColumn("_l", F.octet_length("norm_unit"))
-        .groupBy("_h", "_l", "norm_unit")
-        .agg(
-            F.min(F.struct(F.col(id_col), F.col("unit_idx"))).alias("_keeper"),
-            F.sum("n_occ").alias("n_occ"),
-        )
-        .select(
-            "norm_unit",
-            F.col(f"_keeper.{id_col}").alias(id_col),
-            F.col("_keeper.unit_idx").alias("unit_idx"),
-            "n_occ",
-        )
-    )
 
 
 def mark_duplicates(units: DataFrame, id_col: str = "url") -> DataFrame:
@@ -302,76 +155,6 @@ def dedup_units(units: DataFrame, id_col: str = "url") -> DataFrame:
     return dedup_keepers(units, id_col).drop("n_occ")
 
 
-def partition_local_keepers(pages: DataFrame, mode: str = "sentence",
-                            max_length: int = 0, id_col: str = "url",
-                            text_col: str = "text") -> DataFrame:
-    """Keeper table computed with PARTITION-LOCAL pre-aggregation inside the UDF.
-
-    The reference keeps a per-file local set before touching the global set
-    (src/dedup.c:312-332, quirk Q2); the scale analog is combining per PARTITION
-    before anything crosses the Python→JVM boundary: one mapInPandas pass extracts
-    units and folds them into a local dict, emitting (norm_unit, keeper, n_occ) once
-    per partition. Arrow output and shuffle input shrink by the intra-partition dup
-    factor — on boilerplate-heavy web corpora that factor is large. The global
-    groupBy then merges partials (min keeper, sum counts); results are bit-identical
-    to :func:`dedup_keepers`.
-    """
-    import pandas as pd
-
-    from pyspark.sql.types import (BinaryType, LongType, StringType, StructField,
-                                   StructType)
-
-    from corpus_dedup_spark import kernel
-
-    schema = StructType([
-        StructField("norm_unit", BinaryType()),
-        StructField(id_col, StringType()),
-        StructField("unit_idx", LongType()),
-        StructField("n_occ", LongType()),
-    ])
-
-    def run(batches):
-        agg: dict[bytes, list] = {}
-        for pdf in batches:
-            raw = [t if isinstance(t, bytes) else (t or "").encode("utf-8")
-                   for t in pdf[text_col]]
-            unit_batch = kernel.extract_units_batch(raw, mode, max_length)
-            for doc_id, units in zip(pdf[id_col], unit_batch):
-                for i, u in enumerate(units):
-                    e = agg.get(u)
-                    if e is None:
-                        agg[u] = [doc_id, i, 1]
-                    else:
-                        e[2] += 1
-                        if (doc_id, i) < (e[0], e[1]):
-                            e[0], e[1] = doc_id, i
-        if agg:
-            yield pd.DataFrame({
-                "norm_unit": list(agg.keys()),
-                id_col: [v[0] for v in agg.values()],
-                "unit_idx": [v[1] for v in agg.values()],
-                "n_occ": [v[2] for v in agg.values()],
-            })
-
-    partials = pages.select(id_col, text_col).mapInPandas(run, schema=schema)
-    return (
-        # same hash-prefix comparator accelerator as dedup_keepers (quirk Q6:
-        # the bytes stay in the key; the hash only cheapens sort comparisons)
-        partials.withColumn("_h", F.xxhash64("norm_unit"))
-        .groupBy("_h", "norm_unit")
-        .agg(
-            F.min(F.struct(F.col(id_col), F.col("unit_idx"))).alias("_keeper"),
-            F.sum("n_occ").alias("n_occ"),
-        )
-        .select(
-            "norm_unit",
-            F.col(f"_keeper.{id_col}").alias(id_col),
-            F.col("_keeper.unit_idx").alias("unit_idx"),
-            "n_occ",
-        )
-    )
-
-
 def dedup_stats(units_marked: DataFrame) -> DataFrame:
     """Global counters — mirrors the reference summary (src/dedup.c:1113-1141)."""
     return units_marked.agg(
@@ -382,14 +165,20 @@ def dedup_stats(units_marked: DataFrame) -> DataFrame:
     )
 
 
-def dedup_stats_from_keepers(keepers: DataFrame) -> DataFrame:
-    """Same counters from the aggregated keeper table (bit-identical values)."""
-    return keepers.agg(
+def _keeper_stats_aggs() -> list:
+    """The four summary counters as aggregates over a keeper table
+    (norm_unit, ..., n_occ) — bit-identical to :func:`dedup_stats`."""
+    return [
         F.sum("n_occ").alias("total_units"),
-        F.count("*").alias("unique_units"),
-        (F.sum("n_occ") - F.count("*")).alias("duplicate_units"),
+        F.count(F.lit(1)).alias("unique_units"),
+        (F.sum("n_occ") - F.count(F.lit(1))).alias("duplicate_units"),
         F.sum(F.length("norm_unit") * F.col("n_occ")).alias("bytes_processed"),
-    )
+    ]
+
+
+def dedup_stats_from_keepers(keepers: DataFrame) -> DataFrame:
+    """Same counters as :func:`dedup_stats`, from the aggregated keeper table."""
+    return keepers.agg(*_keeper_stats_aggs())
 
 
 def reassemble(units_kept: DataFrame, id_col: str = "url",
@@ -432,43 +221,23 @@ def reassemble(units_kept: DataFrame, id_col: str = "url",
 
 
 def run_exact_dedup(pages: DataFrame, mode: str = "sentence", max_length: int = 0,
-                    id_col: str = "url", materialize: bool = False,
-                    local_combine: bool = False) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Full reference-dedup pipeline: returns (marked_units, deduped_docs, stats).
+                    id_col: str = "url") -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Full reference-dedup pipeline: returns (keepers, deduped_docs, stats).
 
-    Uses the map-side-combining keeper aggregation (see :func:`dedup_keepers`); the
-    first element of the returned tuple is the keeper table.
-
-    ``materialize`` is OFF by default: persist()-ing the keeper table was measured
-    at 15-25 s for 4M keeper rows at 8 cores (block-manager row serialization
-    dominates and does not scale with cores — it was the single biggest cost of the
-    whole pipeline). Recomputing keepers from lineage costs one extra extract+agg
-    pass and is cheaper at every scale tested. Callers that need stats AND output
-    in one job should use :func:`run_exact_dedup_observed` (stats ride along as an
-    Observation on the reassembly action — zero extra jobs). In production the
-    cross-job reuse point is the Iceberg stage checkpoint (plans/pipeline.py), not
-    the block manager.
-
-    ``local_combine`` switches the keeper computation to the fused
-    extract+partition-local-combine pass (:func:`dedup_keepers_combined`) —
-    bit-identical output. Default OFF: on this synthetic corpus the
-    intra-partition duplication factor is only 1.06x (duplicates are planted
-    uniformly across documents), so the numpy combine costs more than the
-    shuffle it saves (measured +0.9 s at 200k docs / 8 cores). Turn it ON when
-    the input's physical layout co-locates duplicate-heavy documents — e.g.
-    real crawl tables partitioned by (host, fetch time), where per-host
-    boilerplate repeats inside every partition and the combine collapses it
-    before the shuffle.
+    explode_units_arrow → dedup_keepers (map-side-combining keeper aggregation)
+    → reassemble. The keeper table is NOT persisted: persist()-ing it was
+    measured at 15-25 s for 4M keeper rows at 8 cores (block-manager row
+    serialization dominates and does not scale with cores), more than the
+    extract+agg pass a second action recomputes from lineage. Callers that need
+    stats AND output in one job should use :func:`run_exact_dedup_observed`
+    (stats ride along as an Observation on the reassembly action — zero extra
+    jobs). In production the cross-job reuse point is the Iceberg stage
+    checkpoint (plans/pipeline.py), not the block manager.
     """
-    if local_combine:
-        keepers = dedup_keepers_combined(pages, mode, max_length, id_col)
-    else:
-        units = explode_units_arrow(pages, mode, max_length, id_col=id_col)
-        keepers = dedup_keepers(units, id_col)
-    if materialize:
-        keepers = keepers.persist()
-    kept = keepers.drop("n_occ")
-    return keepers, reassemble(kept, id_col), dedup_stats_from_keepers(keepers)
+    keepers = dedup_keepers(
+        explode_units_arrow(pages, mode, max_length, id_col=id_col), id_col)
+    return (keepers, reassemble(keepers.drop("n_occ"), id_col),
+            dedup_stats_from_keepers(keepers))
 
 
 def run_exact_dedup_observed(pages: DataFrame, mode: str = "sentence",
@@ -482,16 +251,10 @@ def run_exact_dedup_observed(pages: DataFrame, mode: str = "sentence",
     duplicate_units / bytes_processed) after the action completes."""
     from pyspark.sql import Observation
 
-    units = explode_units_arrow(pages, mode, max_length, id_col=id_col)
-    keepers = dedup_keepers(units, id_col)
+    keepers = dedup_keepers(
+        explode_units_arrow(pages, mode, max_length, id_col=id_col), id_col)
     obs = Observation()
-    keepers_o = keepers.observe(
-        obs,
-        F.sum("n_occ").alias("total_units"),
-        F.count(F.lit(1)).alias("unique_units"),
-        (F.sum("n_occ") - F.count(F.lit(1))).alias("duplicate_units"),
-        F.sum(F.length("norm_unit") * F.col("n_occ")).alias("bytes_processed"),
-    )
+    keepers_o = keepers.observe(obs, *_keeper_stats_aggs())
     return reassemble(keepers_o.drop("n_occ"), id_col), obs
 
 
@@ -499,8 +262,8 @@ def verify_no_duplicates(deduped_docs: DataFrame, mode: str = "sentence",
                          max_length: int = 0, id_col: str = "url") -> int:
     """The reference's ``verify`` mode (src/verify_mode.c:370-561): re-split the
     engine's own output and count duplicate units. Returns that count (must be 0)."""
-    units = explode_units(deduped_docs, mode, max_length,
-                          text_col="dedup_text", id_col=id_col)
+    units = explode_units_arrow(deduped_docs, mode, max_length,
+                                text_col="dedup_text", id_col=id_col)
     dup_count = (
         units.groupBy("norm_unit").count().filter(F.col("count") > 1)
         .agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0)).alias("dups"))

@@ -255,7 +255,7 @@ class DedupPipeline:
             attach_labels, connected_components)
         from corpus_dedup_spark.operators.minhash_lsh import (band_explode,
                                                               candidate_pairs,
-                                                              doc_features,
+                                                              doc_band_features,
                                                               verify_jaccard)
 
         out: dict[str, DataFrame] = {}
@@ -291,13 +291,13 @@ class DedupPipeline:
             out["features"] = self._read("features")
         else:
             out["features"] = self._write(
-                doc_features(pages, self.cfg, id_col), "features")
+                doc_band_features(pages, self.cfg, id_col), "features")
 
         if self.stage_is_complete("edges"):
             out["edges"] = self._read("edges")
         else:
             pairs, _dropped = candidate_pairs(
-                band_explode(out["features"], self.cfg, id_col), self.cfg, id_col)
+                band_explode(out["features"], id_col), self.cfg, id_col)
             verified = verify_jaccard(pairs, out["features"], self.cfg, id_col)
             edges = verified.filter(
                 F.col("jaccard") >= F.lit(self.cfg.jaccard_threshold))

@@ -11,6 +11,22 @@ import os
 from pyspark.sql import SparkSession
 
 _SHM_MIN_FREE_BYTES = 8 << 30
+_DRIVER_MEM_CAP_MB = 24 << 10
+
+
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """~60% of physical memory (MemTotal), capped at 24g: the rest stays free
+    for the Arrow/pandas Python workers and the OS page cache. The cap alone
+    when MemTotal cannot be read."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{min(total_mb * 6 // 10, _DRIVER_MEM_CAP_MB)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{_DRIVER_MEM_CAP_MB}m"
 
 
 def _default_local_dir() -> str:
@@ -76,7 +92,9 @@ def build_session(
         .config("spark.io.compression.codec", "zstd")
         # local mode runs every task thread in the driver JVM: size the heap for
         # 32 concurrent partial-agg hashmaps (8g thrashes GC at high core counts)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # but never past what the host has
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         # shuffle scratch on the fastest local storage available: this host's
         # /tmp is disk-backed ext4 while /dev/shm is tmpfs — the standard ops
         # practice (NVMe/ramdisk scratch for spark.local.dir) applied locally.

@@ -35,9 +35,10 @@ def main() -> None:
 
     from corpus_dedup_spark.config import DedupConfig
     from corpus_dedup_spark.operators.exact_dedup import (dedup_keepers,
-                                                          explode_units)
+                                                          explode_units_arrow)
     from corpus_dedup_spark.operators.minhash_lsh import (band_explode,
-                                                          doc_features,
+                                                          candidate_pairs,
+                                                          doc_band_features,
                                                           verify_jaccard)
     from corpus_dedup_spark.operators.search import (build_fingerprint_index,
                                                      search)
@@ -68,28 +69,18 @@ def main() -> None:
          "ReadSchema: struct<doc_id:bigint,lang:string,n_chars:bigint>"],
     ))
 
-    # 2. dedup keeper aggregation: partial hash agg before the exchange
-    units = explode_units(pages)
-    keepers = dedup_keepers(units)
+    # 2. exact-dedup keeper aggregation: scan → MapInArrow (flat units, no
+    # explode stage) → partial agg (map-side combine) before the exchange
+    keepers = dedup_keepers(explode_units_arrow(pages))
     sections.append((
-        "Exact-dedup keeper aggregation (map-side combine before shuffle)",
+        "Exact-dedup keeper aggregation (MapInArrow extraction, no explode "
+        "stage, map-side combine before the shuffle)",
         plan_of(keepers),
-        ["partial_min", "partial_count", "hashpartitioning(_h"],
+        ["MapInArrow", "partial_min", "partial_count", "hashpartitioning(_h",
+         "!Generate"],
     ))
 
-    # 2b. flat-Arrow extraction pipeline: scan → MapInArrow (flat units, no
-    # explode stage) → partial-combined keeper aggregation
-    from corpus_dedup_spark.operators.exact_dedup import explode_units_arrow
-
-    keepers_arrow = dedup_keepers(explode_units_arrow(pages))
-    sections.append((
-        "Flat-Arrow extraction feeding the keeper aggregation (MapInArrow, "
-        "no explode stage, partial agg before the exchange)",
-        plan_of(keepers_arrow),
-        ["MapInArrow", "partial_min", "hashpartitioning(_h", "!Generate"],
-    ))
-
-    # 2c. pipeline units stage: extraction alone (what plans/pipeline.py writes
+    # 2b. pipeline units stage: extraction alone (what plans/pipeline.py writes
     # as its first checkpoint) is a pure map — NO shuffle touches the
     # per-occurrence unit stream; dedup happens in the next stage's partial agg
     sections.append((
@@ -101,10 +92,8 @@ def main() -> None:
 
     # 3. LSH candidate generation: ONE groupBy into capped buckets + streamed
     # explodes; hot buckets removed by a broadcast ANTI-join before any collect
-    from corpus_dedup_spark.operators.minhash_lsh import candidate_pairs
-
-    feats = doc_features(pages, cfg)
-    pairs, _dropped = candidate_pairs(band_explode(feats, cfg), cfg)
+    feats = doc_band_features(pages, cfg)
+    pairs, _dropped = candidate_pairs(band_explode(feats), cfg)
     sections.append((
         "LSH candidate pairs (broadcast anti-join of hot buckets -> bucket "
         "collect_list -> streamed pair explode)",

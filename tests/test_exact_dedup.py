@@ -5,8 +5,8 @@ import pytest
 
 from corpus_dedup_spark import kernel
 from corpus_dedup_spark.operators.exact_dedup import (
-    dedup_stats, explode_units, mark_duplicates, reassemble, run_exact_dedup,
-    verify_no_duplicates)
+    dedup_keepers, dedup_stats, explode_units_arrow, mark_duplicates,
+    reassemble, run_exact_dedup, verify_no_duplicates)
 from corpus_dedup_spark.sources.pages import pages_spark
 
 
@@ -22,7 +22,7 @@ def test_explode_units_matches_kernel(spark, pages):
     expected = {
         r["url"]: kernel.extract_units(r["text"].encode()) for r in rows
     }
-    got_rows = explode_units(pages).collect()
+    got_rows = explode_units_arrow(pages).collect()
     got: dict[str, list[bytes]] = {}
     for r in sorted(got_rows, key=lambda r: (r["url"], r["unit_idx"])):
         got.setdefault(r["url"], []).append(bytes(r["norm_unit"]))
@@ -46,9 +46,9 @@ def test_keeper_agg_equals_window_path(spark, pages):
     """The map-side-combining groupBy keeper path must be bit-identical to the
     row_number window semantics (same keeper rows, same counters)."""
     from corpus_dedup_spark.operators.exact_dedup import (
-        dedup_keepers, dedup_stats, dedup_stats_from_keepers)
+        dedup_stats_from_keepers)
 
-    units = explode_units(pages)
+    units = explode_units_arrow(pages)
     marked = mark_duplicates(units).cache()
     keepers = dedup_keepers(units)
     win_kept = sorted(
@@ -67,7 +67,7 @@ def test_intra_doc_dup_counted(spark):
          ("u2", "Same sentence here. Another unique sentence.")],
         ["url", "text"],
     )
-    marked = mark_duplicates(explode_units(df))
+    marked = mark_duplicates(explode_units_arrow(df))
     stats = dedup_stats(marked).collect()[0]
     # units: u1 = [same, same, unique1], u2 = [same, unique2]
     # reference: u1#1 unique, u1#2 intra-doc dup, unique1 unique,
@@ -78,7 +78,7 @@ def test_intra_doc_dup_counted(spark):
 
 def test_deterministic_keeper(spark, pages):
     """Q3 fixed: keeper attribution is deterministic across runs/parallelism."""
-    a = mark_duplicates(explode_units(pages)).filter(~F.col("is_dup"))
+    a = mark_duplicates(explode_units_arrow(pages)).filter(~F.col("is_dup"))
     res1 = sorted((r["url"], r["unit_idx"]) for r in a.collect())
     res2 = sorted((r["url"], r["unit_idx"]) for r in a.repartition(3).sortWithinPartitions("url").collect())
     # recompute from a differently-partitioned input
@@ -87,26 +87,27 @@ def test_deterministic_keeper(spark, pages):
 
 def test_reassemble_round_trip(spark):
     df = spark.createDataFrame([("u1", "One. Two. Three.")], ["url", "text"])
-    out = reassemble(explode_units(df)).collect()[0]
+    out = reassemble(explode_units_arrow(df)).collect()[0]
     assert out["dedup_text"] == "One.\nTwo.\nThree."
     assert out["n_units"] == 3
 
 
 def test_explode_units_arrow_equivalence(spark):
-    """Flat-Arrow extraction ≡ pandas+posexplode on mixed ascii/unicode docs."""
-    from corpus_dedup_spark.operators.exact_dedup import explode_units_arrow
-
-    df = spark.createDataFrame(
-        [("a", "One sentence. Two  spaced!   Third?"),
-         ("b", ""),
-         ("c", None),
-         ("d", "ünïcode first. ascii second."),
-         ("e", "no terminator at all"),
-         ("f", "One sentence. Two  spaced!   Third?")],
-        ["url", "text"])
-    a = explode_units(df).collect()
-    b = explode_units_arrow(df).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    """Flat-Arrow extraction ≡ the scalar spec on mixed ascii/unicode docs,
+    empty and NULL text included: same (url, unit_idx, bytes) rows."""
+    rows = [("a", "One sentence. Two  spaced!   Third?"),
+            ("b", ""),
+            ("c", None),
+            ("d", "ünïcode first. ascii second."),
+            ("e", "no terminator at all"),
+            ("f", "One sentence. Two  spaced!   Third?")]
+    df = spark.createDataFrame(rows, "url string, text string")
+    want = sorted((url, i, u) for url, text in rows
+                  for i, u in enumerate(kernel.extract_units(
+                      (text or "").encode())))
+    got = sorted((r["url"], r["unit_idx"], bytes(r["norm_unit"]))
+                 for r in explode_units_arrow(df).collect())
+    assert got == want
 
 
 def test_dedup_against_corpus(spark):
@@ -135,41 +136,6 @@ def test_dedup_against_corpus(spark):
     kset = {bytes(r["norm_unit"]) for r in kept.collect()}
     cset = {bytes(r["norm_unit"]) for r in corpus_units.collect()}
     assert not (kset & cset)
-
-
-def test_local_combine_bit_identical(spark, pages):
-    """The fused extract+partition-local-combine keeper path (numpy
-    combine_keepers_flat inside one mapInArrow pass) must be bit-identical to
-    the explode+groupBy path — keepers, counts and the reassembled output."""
-    from corpus_dedup_spark.operators.exact_dedup import (
-        dedup_keepers, dedup_keepers_combined, explode_units_arrow)
-
-    base = dedup_keepers(explode_units_arrow(pages))
-    comb = dedup_keepers_combined(pages)
-    a = sorted((bytes(r["norm_unit"]), r["url"], r["unit_idx"], r["n_occ"])
-               for r in base.collect())
-    b = sorted((bytes(r["norm_unit"]), r["url"], r["unit_idx"], r["n_occ"])
-               for r in comb.collect())
-    assert a == b
-
-
-def test_local_combine_edge_cases(spark):
-    """Combine path on unicode / empty / None / heavy-dup inputs, multiple
-    partitions (so the per-partition flush runs more than once)."""
-    from corpus_dedup_spark.operators.exact_dedup import (
-        dedup_keepers, dedup_keepers_combined, explode_units_arrow)
-
-    rows = [("a", "One sentence. Two  spaced!   Third?"),
-            ("b", ""), ("c", None),
-            ("d", "ünïcode first. ascii second."),
-            ("e", "no terminator at all"),
-            ("f", "One sentence. Two  spaced!   Third?"),
-            ("g", "ünïcode first. One sentence.")]
-    # tie on the same unit at idx 0 across urls exercises keeper ordering
-    df = spark.createDataFrame(rows, ["url", "text"]).repartition(4)
-    a = sorted(map(tuple, dedup_keepers(explode_units_arrow(df)).collect()))
-    b = sorted(map(tuple, dedup_keepers_combined(df).collect()))
-    assert a == b
 
 
 def test_bucketed_corpus_state_join_no_corpus_exchange(spark, tmp_path):
@@ -228,95 +194,45 @@ def test_bucketed_corpus_state_join_no_corpus_exchange(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_local_combine_null_ids(spark):
-    """NULL document ids must not crash the combined path and must elect the
-    same keeper as Spark's min(struct) semantics (asc NULLS FIRST): the null
-    id wins any tie group it appears in."""
-    from corpus_dedup_spark.operators.exact_dedup import (
-        dedup_keepers, dedup_keepers_combined, explode_units_arrow)
+def _keeper_model(rows):
+    """Driver-side keeper table from the scalar spec: per distinct unit, the
+    first occurrence under (id NULLS FIRST, unit_idx) and the occurrence
+    count."""
+    occ = sorted(((url is not None, url or "", i, url, u)
+                  for url, text in rows
+                  for i, u in enumerate(kernel.extract_units(
+                      (text or "").encode()))),
+                 key=lambda t: t[:3])
+    model: dict[bytes, list] = {}
+    for _nn, _k, i, url, u in occ:
+        if u in model:
+            model[u][2] += 1
+        else:
+            model[u] = [url, i, 1]
+    return {u: tuple(v) for u, v in model.items()}
 
+
+@pytest.mark.parametrize("n_parts", [1, 4])
+def test_keepers_match_scalar_model(spark, n_parts):
+    """dedup_keepers(explode_units_arrow(df)) equals the scalar-spec model on
+    unicode / empty / NULL text, heavy duplicates and NULL ids, whatever the
+    input partitioning: first-wins keepers, exact n_occ, a NULL id wins its
+    tie (Spark's asc NULLS FIRST)."""
     rows = [("a", "Shared sentence. Only in a."),
             (None, "Shared sentence. Null doc extra!"),
             ("b", "Shared sentence. Null doc extra!"),
-            (None, "Second null doc.")]
-    df = spark.createDataFrame(rows, ["url", "text"]).repartition(2)
-    a = sorted(((bytes(r["norm_unit"]), r["url"], r["unit_idx"], r["n_occ"])
-                for r in dedup_keepers(explode_units_arrow(df)).collect()),
-               key=lambda t: (t[0], t[1] is not None, t[1] or "", t[2]))
-    b = sorted(((bytes(r["norm_unit"]), r["url"], r["unit_idx"], r["n_occ"])
-                for r in dedup_keepers_combined(df).collect()),
-               key=lambda t: (t[0], t[1] is not None, t[1] or "", t[2]))
-    assert a == b
-    keeper_of = {u: url for (u, url, _i, _n) in a}
-    assert keeper_of[b"Shared sentence."] is None  # NULLS FIRST wins the tie
-
-
-def test_combine_keepers_flat_fragmentation_safe():
-    """Partial-group fragmentation is allowed; totals must still be exact.
-    Simulate a hash collision by feeding equal-length distinct contents and
-    checking sum(n_occ) + keeper-min invariants hold per content."""
-    import numpy as np
-
-    units = [b"aaa", b"bbb", b"aaa", b"ccc", b"aaa", b"bbb"]
-    values = np.frombuffer(b"".join(units), dtype=np.uint8)
-    offsets = np.zeros(len(units) + 1, dtype=np.int64)
-    np.cumsum([len(u) for u in units], out=offsets[1:])
-    url_rank = np.array([3, 2, 1, 0, 0, 0], dtype=np.int64)
-    unit_idx = np.array([0, 0, 0, 0, 1, 2], dtype=np.int64)
-    sel, n_occ, fnv = kernel.combine_keepers_flat(
-        values, offsets, url_rank, unit_idx)
-    got = {}
-    for s, k in zip(sel.tolist(), n_occ.tolist()):
-        u = units[s]
-        cur = got.get(u, (None, 0))
-        key = (url_rank[s], unit_idx[s])
-        best = key if cur[0] is None else min(cur[0], key)
-        got[u] = (best, cur[1] + k)
-    # first-wins order is lexicographic (url_rank, unit_idx):
-    #   aaa occurs at (3,0),(1,0),(0,1) -> min (0,1); bbb at (2,0),(0,2) -> (0,2)
-    assert got[b"aaa"] == ((0, 1), 3)
-    assert got[b"bbb"] == ((0, 2), 2)
-    assert got[b"ccc"] == ((0, 0), 1)
-
-
-from hypothesis import given, settings
-from hypothesis import strategies as st
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(
-    st.tuples(st.binary(min_size=0, max_size=6).map(
-        lambda b: bytes(x % 3 + 97 for x in b)),  # tiny alphabet -> collisions
-        st.integers(0, 4), st.integers(0, 9)),
-    max_size=40))
-def test_combine_keepers_flat_matches_model(rows):
-    """Fuzz combine_keepers_flat against a naive per-content model: after
-    min-reducing keepers and summing counts across fragments, every content's
-    keeper is its true (url_rank, unit_idx) minimum and counts are exact."""
-    import numpy as np
-
-    units = [u for u, _, _ in rows]
-    values = np.frombuffer(b"".join(units), dtype=np.uint8)
-    offsets = np.zeros(len(units) + 1, dtype=np.int64)
-    np.cumsum([len(u) for u in units], out=offsets[1:])
-    url_rank = np.array([r for _, r, _ in rows], dtype=np.int64)
-    unit_idx = np.array([i for _, _, i in rows], dtype=np.int64)
-    sel, n_occ, fnv = kernel.combine_keepers_flat(
-        values, offsets, url_rank, unit_idx)
-    got: dict[bytes, tuple] = {}
-    for s, k in zip(sel.tolist(), n_occ.tolist()):
-        u = units[s]
-        cur = got.get(u)
-        key = (url_rank[s], unit_idx[s])
-        got[u] = (key if cur is None else min(cur[0], key),
-                  k if cur is None else cur[1] + k)
-    want: dict[bytes, tuple] = {}
-    for u, r, i in rows:
-        cur = want.get(u)
-        want[u] = ((r, i) if cur is None else min(cur[0], (r, i)),
-                   1 if cur is None else cur[1] + 1)
-    assert got == want
-    # fnv values must be each selected row's own hash
-    if len(sel):
-        expect = kernel.fnv1a_flat(values, offsets)[sel]
-        assert (fnv == expect).all()
+            (None, "Second null doc."),
+            ("c", "ünïcode first. One sentence."),
+            ("d", "One sentence. Two  spaced!   Third?"),
+            ("e", ""), ("f", None),
+            ("g", "no terminator at all"),
+            ("ü", "ünïcode first. ascii second.")]
+    rows += [(f"dup{i:02d}", "Boiler plate. Footer line. Footer line.")
+             for i in range(20)]
+    df = spark.createDataFrame(rows, "url string, text string") \
+        .repartition(n_parts)
+    got = {bytes(r["norm_unit"]): (r["url"], r["unit_idx"], r["n_occ"])
+           for r in dedup_keepers(explode_units_arrow(df)).collect()}
+    assert got == _keeper_model(rows)
+    assert got[b"Shared sentence."][0] is None
+    assert got[b"Footer line."] == ("dup00", 1, 40)

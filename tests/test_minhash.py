@@ -6,6 +6,7 @@ import pytest
 from corpus_dedup_spark.config import DedupConfig
 from corpus_dedup_spark.operators.minhash_lsh import (band_explode,
                                                       candidate_pairs,
+                                                      doc_band_features,
                                                       doc_features,
                                                       near_dup_clusters,
                                                       near_dup_edges)
@@ -96,8 +97,8 @@ def test_clusters_cover_exact_groups(spark, cfg, planted):
 def test_skew_cap_drops_hot_buckets(spark, planted):
     df, _, _ = planted
     tiny_cap = DedupConfig(jaccard_threshold=0.35, max_bucket_size=2)
-    feats = doc_features(df, tiny_cap)
-    bands_df = band_explode(feats, tiny_cap)
+    feats = doc_band_features(df, tiny_cap)
+    bands_df = band_explode(feats)
     pairs, dropped = candidate_pairs(bands_df, tiny_cap)
     assert dropped.count() > 0  # exact-dup groups of 3+ exceed cap
     # pairs still computable and bounded

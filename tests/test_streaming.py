@@ -3,7 +3,7 @@
 import pyspark.sql.functions as F
 import pytest
 
-from corpus_dedup_spark.operators.exact_dedup import explode_units
+from corpus_dedup_spark.operators.exact_dedup import explode_units_arrow
 from corpus_dedup_spark.sources.pages import pages_spark
 from corpus_dedup_spark.streaming.stream_dedup import run_stream_to_memory
 
@@ -20,14 +20,14 @@ def test_stream_matches_batch_keepset(spark, tmp_path):
 
     batch_units = {
         bytes(r["norm_unit"])
-        for r in explode_units(df).select("norm_unit").distinct().collect()
+        for r in explode_units_arrow(df).select("norm_unit").distinct().collect()
     }
     assert stream_units == batch_units
 
 
 def test_stateful_host_stats(spark, tmp_path):
     from corpus_dedup_spark.streaming.stateful import run_host_stats_to_memory
-    from corpus_dedup_spark.operators.exact_dedup import explode_units
+    from corpus_dedup_spark.operators.exact_dedup import explode_units_arrow
 
     df, _, _ = pages_spark(spark, n_docs=80, seed=9)
     path = str(tmp_path / "pages_state")
@@ -43,7 +43,7 @@ def test_stateful_host_stats(spark, tmp_path):
         r["host"]: r for r in (
             df.selectExpr("regexp_extract(url, 'https?://([^/]+)/', 1) as host",
                           "url", "text")
-            .join(explode_units(df).groupBy("url").count(), "url", "left")
+            .join(explode_units_arrow(df).groupBy("url").count(), "url", "left")
             .groupBy("host")
             .agg(F.count("*").alias("n_docs"),
                  F.sum(F.coalesce("count", F.lit(0))).alias("n_units"))

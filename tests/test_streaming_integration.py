@@ -10,7 +10,7 @@ than the default in-memory HDFS-backed one.
 import pyspark.sql.functions as F
 import pytest
 
-from corpus_dedup_spark.operators.exact_dedup import explode_units
+from corpus_dedup_spark.operators.exact_dedup import explode_units_arrow
 from corpus_dedup_spark.sources.pages import pages_spark
 from corpus_dedup_spark.streaming.stream_dedup import stream_unit_dedup
 
@@ -69,12 +69,12 @@ def test_rocksdb_restart_resume(spark, tmp_path):
         # replayed batch1 re-emitted NOTHING (its units were all in state)
         new_units = set(emitted) - units1
         batch1_units = {bytes(r["norm_unit"]) for r in
-                        explode_units(batch1).select("norm_unit").collect()}
+                        explode_units_arrow(batch1).select("norm_unit").collect()}
         assert not (new_units & batch1_units)
         # final set == batch keep-set over the union of all input
         union = batch1.unionByName(batch1).unionByName(batch2)
         expect = {bytes(r["norm_unit"]) for r in
-                  explode_units(union).select("norm_unit").distinct().collect()}
+                  explode_units_arrow(union).select("norm_unit").distinct().collect()}
         assert set(emitted) == expect
     finally:
         if prev is None:
