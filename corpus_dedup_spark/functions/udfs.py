@@ -417,19 +417,22 @@ def make_window_match_positions_udf(window: int, target_hash: int,
 
 
 def make_window_fingerprints_udf(window: int, base: int = kernel.SEARCH_HASH_BASE,
-                                 add: int = 1):
+                                 add: int = 1, squash: bool = True):
     """text → array<int64> of rolling window hashes (positions implicit 0..n-window).
 
     Search-hash constants by default (ref: src/search_mode.c:114-149 — base
     1315423911, value = cp+1 so a leading U+0000 affects the hash).
+    ``squash`` hashes the newline-squashed text (dedup mode's view); off, the
+    raw decoded text (the reference's search mode, src/search_mode.c:189-204).
     """
+    prep = kernel.squash_newlines if squash else (lambda b: b)
 
     @pandas_udf(ArrayType(LongType()))
     def window_fps(texts: pd.Series) -> pd.Series:
         out = []
         empty = np.empty(0, dtype=np.int64)
         for t in texts:
-            cps = kernel.utf8_decode_buffer(kernel.squash_newlines(_as_bytes(t)))
+            cps = kernel.utf8_decode_buffer(prep(_as_bytes(t)))
             n = len(cps)
             if n < window:
                 out.append(empty)

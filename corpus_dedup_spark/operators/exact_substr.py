@@ -90,10 +90,13 @@ def duplicate_substring_spans(
         # r6: the index is cached in its per-document ARRAY form (~n_docs
         # rows, not ~n_chars rows — the exploded cache was the operator's
         # single biggest cost); both consumers explode it lazily inside
-        # whole-stage codegen.
+        # whole-stage codegen. Only (id, fps) is cached: the index's text
+        # column is not needed here — survivors cut their window text from
+        # ``docs`` in the join below — and would grow the cache by the corpus.
         pidx = build_fingerprint_index(docs.select(id_col, text_col),
                                        window=window, id_col=id_col,
-                                       text_col=text_col, squash=False).persist()
+                                       text_col=text_col, squash=False
+                                       ).select(id_col, "fps").persist()
         ph = explode_fingerprints(pidx, id_col).withColumnRenamed("whash", "_h")
         hot = (
             ph.groupBy("_h")

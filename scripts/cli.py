@@ -113,7 +113,7 @@ def _run_one_search(spark, pages, query: str, limit: int, idx_cache: dict) -> No
     if qlen not in idx_cache:
         idx_cache[qlen] = build_fingerprint_index(
             pages, window=qlen, squash=False).persist()
-    hits = search(idx_cache[qlen], pages, query, squash=False).persist()
+    hits = search(idx_cache[qlen], pages, query).persist()
     # url:line:col hit lines, as the reference prints (src/search_mode.c:288)
     for r in with_line_col(hits, pages).limit(limit).collect():
         print(f"{r['url']}:{r['line']}:{r['col']}")

@@ -33,7 +33,7 @@ def test_search_hits_carry_line_col(spark):
         ["url", "text"],
     )
     idx = build_fingerprint_index(pages, window=6, squash=False)
-    hits = search(idx, pages, "needle", squash=False)
+    hits = search(idx, pages, "needle")
     rows = {(r["url"], r["line"], r["col"])
             for r in with_line_col(hits, pages).collect()}
     # 1-based line/col, newline-relative, like the reference's printf("%s:%zu:%zu")
