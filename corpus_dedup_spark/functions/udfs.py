@@ -1,8 +1,11 @@
-"""Vectorized pandas/Arrow UDFs wrapping the parity kernels.
+"""Vectorized Arrow/pandas UDFs wrapping the parity kernels.
 
 Per the input hint: pyspark.sql DataFrame + vectorized pandas/Arrow UDFs throughout, no
 per-row Python UDFs. Every UDF here is Arrow-batched; inner loops are numpy or tight
-C-backed bytes/regex operations from :mod:`corpus_dedup_spark.kernel`.
+C-backed bytes/regex operations from :mod:`corpus_dedup_spark.kernel`. The UDFs that
+extract units are ``arrow_udf``s: they hand zero-copy views of the text column's Arrow
+buffers (:func:`_binary_view`) to the one batched extractor,
+:func:`kernel.extract_units_batch_flat_arrow`.
 
 Hash columns are uint64 semantically but carried as Spark LongType (bit-reinterpreted
 via ``int64`` views) — comparisons/joins are unaffected.
@@ -12,7 +15,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import ArrayType, BinaryType, LongType
 
 from corpus_dedup_spark import kernel
@@ -30,22 +35,61 @@ def _as_bytes(x) -> bytes:
     return str(x).encode("utf-8")
 
 
+def _binary_view(col: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Arrow string/binary Array → (values uint8 ndarray, starts, ends) without
+    boxing a single document: zero-copy views of the value and offset buffers.
+    Null slots are returned as empty spans (start == end)."""
+    if pa.types.is_string(col.type):
+        col = col.cast(pa.binary())
+    elif pa.types.is_large_string(col.type):
+        col = col.cast(pa.large_binary())
+    off_dtype = (np.int64 if pa.types.is_large_binary(col.type)
+                 else np.int32)
+    bufs = col.buffers()
+    offs = np.frombuffer(bufs[1], dtype=off_dtype)[
+        col.offset:col.offset + len(col) + 1].astype(np.int64)
+    arr = (np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None
+           else np.empty(0, dtype=np.uint8))
+    starts, ends = offs[:-1], offs[1:]
+    if col.null_count:
+        valid = col.is_valid().to_numpy(zero_copy_only=False)
+        ends = np.where(valid, ends, starts)
+    return arr, starts, ends
+
+
+def _binary_array(values: np.ndarray, offsets: np.ndarray) -> pa.Array:
+    """Flat (values, offsets) buffers → Arrow binary array, built from the
+    buffers without a Python object per row."""
+    if offsets[-1] >= (1 << 31):  # not assert: must survive python -O
+        raise ValueError(
+            "Arrow batch bytes exceed int32 offsets "
+            f"({int(offsets[-1])} bytes); lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch")
+    return pa.Array.from_buffers(
+        pa.binary(), len(offsets) - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(values)])
+
+
 # ---------------------------------------------------------------------------
 # U1+U5+U6 — unit extraction (squash → split → normalize → truncate → drop empty)
 # ---------------------------------------------------------------------------
 
 def make_extract_units_udf(mode: str = "sentence", max_length: int = 0):
-    """text (string|binary) → array<binary> of normalized units, document order.
+    """text (string|binary) → array<binary> of normalized units, document order
+    (a NULL text gives an empty array).
 
     This is the byte-identical-per-url invariant kernel (ref: src/sentence_splitter.c:
     277-401, src/text_utils.c:7-34, src/io_utils.c:68-88, src/dedup.c:297-366).
     """
 
-    @pandas_udf(ArrayType(BinaryType()))
-    def extract_units(texts: pd.Series) -> pd.Series:
-        batch = kernel.extract_units_batch(
-            [_as_bytes(t) for t in texts], mode, max_length)
-        return pd.Series(batch)
+    @arrow_udf(ArrayType(BinaryType()))
+    def extract_units(texts: pa.Array) -> pa.Array:
+        d, u, v, o = kernel.extract_units_batch_flat_arrow(
+            *_binary_view(texts), mode, max_length)
+        list_off = np.zeros(len(texts) + 1, dtype=np.int32)
+        np.cumsum(np.bincount(d, minlength=len(texts)), out=list_off[1:])
+        return pa.ListArray.from_arrays(
+            pa.array(list_off), _binary_array(v, o).take(np.lexsort((u, d))))
 
     return extract_units
 
@@ -70,14 +114,12 @@ def _shingle_hashes(unit_hashes: np.ndarray, k: int) -> np.ndarray:
     return np.unique(acc)
 
 
-def _char_shingle_hashes(units: list[bytes], n: int) -> np.ndarray:
-    """Character n-gram shingles over the normalized unit stream (units joined by a
-    single space, mirroring the reference's normalized output — quirk Q4): one u64
-    rolling hash per n-byte window, vectorized over the whole doc."""
-    blob = b" ".join(units)
-    if not blob:
-        return np.empty(0, dtype=_U64)
-    arr = np.frombuffer(blob, dtype=np.uint8).astype(_U64)
+def _char_shingle_hashes(blob: np.ndarray, n: int) -> np.ndarray:
+    """Character n-gram shingles over a document's normalized units joined by a
+    single space (``blob``, uint8), mirroring the reference's normalized output
+    — quirk Q4: one u64 rolling hash per n-byte window, vectorized over the
+    whole doc."""
+    arr = blob.astype(_U64)
     if len(arr) <= n:
         windows = arr[None, :]
     else:
@@ -87,13 +129,6 @@ def _char_shingle_hashes(units: list[bytes], n: int) -> np.ndarray:
         for j in range(windows.shape[1]):
             acc = acc * _MIX_BASE + windows[:, j]
     return np.unique(acc)
-
-
-def _doc_shingles(units: list[bytes], unit_hashes: np.ndarray,
-                  cfg: DedupConfig) -> np.ndarray:
-    if cfg.shingle_level == "char":
-        return _char_shingle_hashes(units, cfg.char_ngram)
-    return _shingle_hashes(unit_hashes, cfg.shingle_k)
 
 
 def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
@@ -206,36 +241,40 @@ def _optimal_densify(mat: np.ndarray, mask: np.ndarray, C: np.uint64) -> np.ndar
     return dens.reshape(n, P)
 
 
-def _shingle_sets_from_texts(raw: list[bytes], cfg: DedupConfig) -> list[np.ndarray]:
-    """texts → per-doc sorted-unique shingle hash sets.
-
-    Unit-level shingles need only the per-unit FNV hashes, so the flat kernel
-    path (extract_units_batch_flat + fnv1a_flat) runs with ZERO per-unit Python
-    objects; char-level shingles need the unit bytes and use the list path."""
-    n = len(raw)
-    if cfg.shingle_level == "unit":
-        d, _u, v, o = kernel.extract_units_batch_flat(raw, cfg.mode, cfg.max_length)
-        uh = kernel.fnv1a_flat(v, o)
-        out = [np.empty(0, dtype=_U64)] * n
-        if len(d):
-            bounds = np.flatnonzero(np.diff(d) != 0) + 1
-            starts = np.concatenate([[0], bounds]).astype(np.int64)
-            ends = np.concatenate([bounds, [len(d)]]).astype(np.int64)
-            k = cfg.shingle_k
-            for s0, s1, di in zip(starts.tolist(), ends.tolist(),
-                                  d[starts].tolist()):
-                out[di] = _shingle_hashes(uh[s0:s1], k)
+def _shingle_sets(texts: pa.Array, cfg: DedupConfig) -> list[np.ndarray]:
+    """Arrow text column → per-doc sorted-unique shingle hash sets, from the
+    flat units of the one batched extractor. A document's units are adjacent
+    rows in unit order; unit-level shingles need only their FNV hashes (no
+    per-unit Python objects), char-level ones their bytes joined by spaces."""
+    d, _u, v, o = kernel.extract_units_batch_flat_arrow(
+        *_binary_view(texts), cfg.mode, cfg.max_length)
+    out = [np.empty(0, dtype=_U64)] * len(texts)
+    if not len(d):
         return out
-    unit_lists = kernel.extract_units_batch(raw, cfg.mode, cfg.max_length)
-    counts = [len(vv) for vv in unit_lists]
-    flat = [u for vv in unit_lists for u in vv]
-    uh_all = kernel.fnv1a_many(flat)
-    out = []
-    pos = 0
-    for units, c in zip(unit_lists, counts):
-        out.append(_doc_shingles(units, uh_all[pos:pos + c], cfg))
-        pos += c
+    bounds = np.flatnonzero(np.diff(d) != 0) + 1
+    docs = zip(np.concatenate([[0], bounds]).tolist(),
+               np.concatenate([bounds, [len(d)]]).tolist(),
+               d[np.concatenate([[0], bounds])].tolist())
+    if cfg.shingle_level == "unit":
+        uh = kernel.fnv1a_flat(v, o)
+        for s0, s1, di in docs:
+            out[di] = _shingle_hashes(uh[s0:s1], cfg.shingle_k)
+    else:
+        for s0, s1, di in docs:
+            blob = np.insert(v[o[s0]:o[s1]], o[s0 + 1:s1] - o[s0], 0x20)
+            out[di] = _char_shingle_hashes(blob, cfg.char_ngram)
     return out
+
+
+def _packed_rows(rows) -> pa.Array:
+    """Per-row u64 arrays (or the rows of a u64 matrix) → Arrow binary array
+    of little-endian packed blobs."""
+    lens = np.fromiter((len(r) for r in rows), dtype=np.int64, count=len(rows))
+    offsets = np.zeros(len(rows) + 1, dtype=np.int64)
+    np.cumsum(lens * 8, out=offsets[1:])
+    values = (np.concatenate(rows).view(np.uint8) if len(rows)
+              else np.empty(0, dtype=np.uint8))
+    return _binary_array(values, offsets)
 
 
 def make_features_udf(cfg: DedupConfig):
@@ -260,15 +299,13 @@ def make_features_udf(cfg: DedupConfig):
         StructField("sig", BinaryType()),
     ])
 
-    @pandas_udf(schema)
-    def features(texts: pd.Series) -> pd.DataFrame:
-        shingle_sets = _shingle_sets_from_texts(
-            [_as_bytes(t) for t in texts], cfg)
+    @arrow_udf(schema)
+    def features(texts: pa.Array) -> pa.Array:
+        shingle_sets = _shingle_sets(texts, cfg)
         sig = _oph_signatures_from_shingle_sets(shingle_sets, a0, b0, num_perm)
-        return pd.DataFrame({
-            "shingles": [s.tobytes() for s in shingle_sets],
-            "sig": [row.tobytes() for row in sig],
-        })
+        return pa.StructArray.from_arrays(
+            [_packed_rows(shingle_sets), _packed_rows(sig)],
+            names=["shingles", "sig"])
 
     return features
 
@@ -306,17 +343,17 @@ def make_band_features_udf(cfg: DedupConfig):
         StructField("bands", ArrayType(LongType())),
     ])
 
-    @pandas_udf(schema)
-    def band_features(texts: pd.Series) -> pd.DataFrame:
-        shingle_sets = _shingle_sets_from_texts(
-            [_as_bytes(t) for t in texts], cfg)
+    @arrow_udf(schema)
+    def band_features(texts: pa.Array) -> pa.Array:
+        shingle_sets = _shingle_sets(texts, cfg)
         sig = _oph_signatures_from_shingle_sets(
             shingle_sets, a0, b0, num_perm).view(_U64)
         bh = _band_hashes_from_sig_matrix(sig, bands, rows)
-        return pd.DataFrame({
-            "shingles": [s.tobytes() for s in shingle_sets],
-            "bands": list(bh),
-        })
+        band_off = np.arange(len(texts) + 1, dtype=np.int32) * bands
+        return pa.StructArray.from_arrays(
+            [_packed_rows(shingle_sets),
+             pa.ListArray.from_arrays(pa.array(band_off), pa.array(bh.ravel()))],
+            names=["shingles", "bands"])
 
     # Pure, but a posexplode over ``bands`` makes Catalyst infer a
     # ``size(bands) > 0`` filter and push it through the projection, which
@@ -330,25 +367,22 @@ def make_band_features_udf(cfg: DedupConfig):
 # SimHash (near-dup alternative; 64-bit, from unit hashes)
 # ---------------------------------------------------------------------------
 
-@pandas_udf(LongType())
-def simhash_udf(unit_lists: pd.Series) -> pd.Series:
-    """array<binary> units → int64 SimHash: sign of per-bit vote over unit FNV hashes."""
-    lists = [v if v is not None else [] for v in unit_lists]
-    counts = [len(v) for v in lists]
-    flat = [_as_bytes(u) for v in lists for u in v]
-    uh = kernel.fnv1a_many(flat)
-    bits = ((uh[:, None] >> np.arange(64, dtype=_U64)[None, :]) & _U64(1)).astype(np.int64)
-    votes = bits * 2 - 1  # 0 → -1, 1 → +1
-    out = np.zeros(len(lists), dtype=np.uint64)
-    pos = 0
-    for i, c in enumerate(counts):
-        if c:
-            tally = votes[pos:pos + c].sum(axis=0)
-            out[i] = np.bitwise_or.reduce(
-                np.where(tally > 0, _U64(1), _U64(0)) << np.arange(64, dtype=_U64)
-            )
-        pos += c
-    return pd.Series(out.view(np.int64))
+@arrow_udf(LongType())
+def simhash_udf(unit_lists: pa.Array) -> pa.Array:
+    """array<binary> units → int64 SimHash: sign of per-bit vote over unit FNV
+    hashes (a NULL list or unit counts as empty)."""
+    counts = pc.list_value_length(unit_lists).fill_null(0).to_numpy()
+    out = np.zeros(len(unit_lists), dtype=_U64)
+    units = unit_lists.flatten()
+    if len(units):
+        arr, starts, ends = _binary_view(units.fill_null(b""))
+        uh = kernel.fnv1a_flat(arr, np.append(starts, ends[-1]))
+        bit = np.arange(64, dtype=_U64)
+        votes = ((uh[:, None] >> bit) & _U64(1)).astype(np.int64) * 2 - 1
+        has = counts > 0
+        tally = np.add.reduceat(votes, (np.cumsum(counts) - counts)[has], axis=0)
+        out[has] = np.bitwise_or.reduce((tally > 0).astype(_U64) << bit, axis=1)
+    return pa.array(out.view(np.int64))
 
 
 def make_sig_digest_udf(num_perm: int):

@@ -1,10 +1,15 @@
 """Pure-Python/numpy parity kernels — the executable spec of the reference semantics.
 
 Every function here is a from-scratch reimplementation of behavior observed in the
-reference (``/root/reference``, cited per-function as file:line). These kernels are the
-single source of truth for both the pytest golden tests and the vectorized pandas UDFs in
-:mod:`corpus_dedup_spark.functions.udfs`. They operate on **bytes**, because the reference
-is byte-oriented (UTF-8 is not validated for dedup; invalid sequences must survive).
+C reference (cited per-function as file:line). They operate on
+**bytes**, because the reference is byte-oriented (UTF-8 is not validated for dedup;
+invalid sequences must survive).
+
+The unit pipeline exists twice. :func:`extract_units` and the scalar splitters,
+normalizer and hash it calls are the executable spec, pinned by the pytest golden tests.
+:func:`extract_units_batch_flat_arrow` is the one batched extractor, fed Arrow buffers by
+every Spark UDF in :mod:`corpus_dedup_spark.functions.udfs` and the exact leg; it shares
+no splitting code with the spec and is property-tested against it.
 
 No code is copied from the reference — these are clean-room ports of the *semantics*.
 """
@@ -104,23 +109,28 @@ def utf8_decode_buffer(data: bytes) -> np.ndarray:
     arr = np.frombuffer(data, dtype=np.uint8)
     if (arr < 0x80).all():
         return arr.astype(np.uint32)
-    return _utf8_decode_vec(arr)
+    cp, is_start = _utf8_decode_vec(arr)
+    return cp[is_start]
 
 
-def utf8_decode_buffer_pos(data: bytes) -> tuple[np.ndarray, np.ndarray]:
+def utf8_decode_buffer_pos(data: bytes | np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Like :func:`utf8_decode_buffer` but also returns each codepoint's BYTE
     start position — the bridge that lets the codepoint-level splitter emit
-    byte spans over the original buffer."""
-    if not data:
+    byte spans over the original buffer. Takes bytes or a uint8 array."""
+    if len(data) == 0:
         return np.empty(0, dtype=np.uint32), np.empty(0, dtype=np.int64)
     arr = np.frombuffer(data, dtype=np.uint8)
     if (arr < 0x80).all():
         return arr.astype(np.uint32), np.arange(len(arr), dtype=np.int64)
-    return _utf8_decode_vec_pos(arr)
+    cp, is_start = _utf8_decode_vec(arr)
+    pos = np.flatnonzero(is_start)
+    return cp[pos], pos
 
 
-def _utf8_decode_vec(arr: np.ndarray) -> np.ndarray:
-    """Vectorized decode, bit-identical to the scalar advance loop.
+def _utf8_decode_vec(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized decode, bit-identical to the scalar advance loop. Returns
+    ``(cp, is_start)``: the codepoint decoded at every byte, and the mask of the
+    bytes that start a sequence (the scalar loop visits exactly those).
 
     UTF-8 is self-synchronizing: valid sequences have non-continuation leads and
     continuation interiors, so every non-continuation byte is a sequence start, and
@@ -164,45 +174,7 @@ def _utf8_decode_vec(arr: np.ndarray) -> np.ndarray:
         np.where(v2, cp2,
                  np.where(v3, cp3,
                           np.where(v4, cp4, np.uint32(0xFFFD)))))
-    return cp[is_start]
-
-
-def _utf8_decode_vec_pos(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """:func:`_utf8_decode_vec` variant returning (codepoints, byte positions)."""
-    n = arr.shape[0]
-    pad = np.zeros(n + 3, dtype=np.uint8)
-    pad[:n] = arr
-    b0 = arr.astype(np.uint32)
-    b1 = pad[1:n + 1].astype(np.uint32)
-    b2 = pad[2:n + 2].astype(np.uint32)
-    b3 = pad[3:n + 3].astype(np.uint32)
-    c1 = (pad[1:n + 1] & 0xC0) == 0x80
-    c2 = (pad[2:n + 2] & 0xC0) == 0x80
-    c3 = (pad[3:n + 3] & 0xC0) == 0x80
-    ascii_ = arr < 0x80
-    lead2 = (arr & 0xE0) == 0xC0
-    lead3 = (arr & 0xF0) == 0xE0
-    lead4 = (arr & 0xF8) == 0xF0
-    cp2 = ((b0 & 0x1F) << 6) | (b1 & 0x3F)
-    cp3 = ((b0 & 0x0F) << 12) | ((b1 & 0x3F) << 6) | (b2 & 0x3F)
-    cp4 = (((b0 & 0x07) << 18) | ((b1 & 0x3F) << 12)
-           | ((b2 & 0x3F) << 6) | (b3 & 0x3F))
-    v2 = lead2 & c1 & (cp2 >= 0x80)
-    v3 = lead3 & c1 & c2 & (cp3 >= 0x800) & ~((cp3 >= 0xD800) & (cp3 <= 0xDFFF))
-    v4 = lead4 & c1 & c2 & c3 & (cp4 >= 0x10000) & (cp4 <= 0x10FFFF)
-    cont = (arr & 0xC0) == 0x80
-    covered = np.zeros(n, dtype=bool)
-    covered[1:] = v2[:-1] | v3[:-1] | v4[:-1]
-    covered[2:] |= v3[:-2] | v4[:-2]
-    covered[3:] |= v4[:-3]
-    is_start = ~cont | ~covered
-    cp = np.where(
-        ascii_, b0,
-        np.where(v2, cp2,
-                 np.where(v3, cp3,
-                          np.where(v4, cp4, np.uint32(0xFFFD)))))
-    pos = np.flatnonzero(is_start)
-    return cp[pos], pos
+    return cp, is_start
 
 
 # ---------------------------------------------------------------------------
@@ -310,18 +282,83 @@ def split_sentences(text: bytes) -> list[tuple[int, int]]:
     dot-suppression; immediate split on 。？！…؟｡; invalid bytes skipped one at a time.
     Returned spans include terminators/closers, exclude inter-sentence whitespace.
 
-    Dispatches to a numpy-batched fast path for pure-ASCII documents (the dominant
-    case for extracted web text; the reference SIMD-batches the same event scan —
-    src/sentence_splitter.c:202-245). Output is identical to the scalar automaton
-    (property-tested in tests/test_kernel_properties.py).
+    This scalar automaton is the executable spec; it shares no code with the
+    vectorized splitters of :func:`extract_units_batch_flat_arrow`, which are
+    property-tested against it (tests/test_kernel_properties.py).
     """
+    out: list[tuple[int, int]] = []
     n = len(text)
-    if n >= 8192:  # per-doc numpy overhead only amortizes on large docs;
-        arr = np.frombuffer(text, dtype=np.uint8)  # batches use split_sentences_batch
-        if not (arr & 0x80).any():
-            return _split_sentences_ascii(arr)
-    return _split_sentences_scalar(text)
+    if n == 0:
+        return out
+    ss = _skip_white_space(text, 0, n)
+    cur = ss
+    while cur < n:
+        b0 = text[cur]
+        if b0 < 0x80:
+            m = _EVENT_RE.search(text, cur, n)
+            if m is None:
+                cur = n
+                break
+            cur = m.start()
+            b0 = text[cur]
+            if b0 < 0x80:  # one of . ! ?
+                term_end = cur + 1
+                while term_end < n and text[term_end] == b0:
+                    term_end += 1
+                after = _skip_closing_punct(text, term_end, n)
+                ws = _skip_white_space(text, after, n)
+                split_here = False
+                if after >= n:
+                    split_here = True
+                elif ws > after:
+                    if b0 == 0x2E:  # '.'
+                        if not _should_block_split_on_dot(text, ss, cur, ws, n):
+                            split_here = True
+                    else:
+                        split_here = True
+                if split_here:
+                    if after > ss:
+                        out.append((ss, after - ss))
+                    ss = ws
+                    cur = ss
+                else:
+                    cur = ws if ws > after else after
+                continue
+        # non-ASCII byte: CJK fast paths then general decode
+        if (
+            b0 == 0xE3 and cur + 2 < n
+            and text[cur + 1] == 0x80 and text[cur + 2] == 0x82
+        ):  # 。
+            adv, split_here = 3, True
+        elif (
+            b0 == 0xEF and cur + 2 < n
+            and text[cur + 1] == 0xBC and text[cur + 2] in (0x9F, 0x81)
+        ):  # ？ ！
+            adv, split_here = 3, True
+        else:
+            cp, adv, invalid = utf8_decode_advance(text, cur, n)
+            if invalid:  # wrapper returns 0 → cursor++ (src/sentence_splitter.c:366-369)
+                cur += 1
+                continue
+            split_here = cp in _IMMEDIATE_TERMINATORS
+        nxt = cur + adv
+        if split_here:
+            after = _skip_closing_punct(text, nxt, n)
+            if after > ss:
+                out.append((ss, after - ss))
+            ss = _skip_white_space(text, after, n)
+            cur = ss
+            continue
+        cur = nxt
+    if cur > ss:
+        out.append((ss, cur - ss))
+    return out
 
+
+# ---------------------------------------------------------------------------
+# Vectorized sentence splitters over concatenated document buffers: the batch
+# path of extract_units_batch_flat_arrow, property-tested against split_sentences
+# ---------------------------------------------------------------------------
 
 # lowercase 2-/3-letter abbreviation words packed as little integers for vectorized
 # membership tests ("mr" → 0x6d72, ...)
@@ -329,14 +366,6 @@ _ABBREV_2_CODES = np.array(
     sorted((w[0] << 8) | w[1] for w in _ABBREV_2), dtype=np.int64)
 _ABBREV_3_CODES = np.array(
     sorted((w[0] << 16) | (w[1] << 8) | w[2] for w in _ABBREV_3), dtype=np.int64)
-
-
-def _split_sentences_ascii(arr: np.ndarray) -> list[tuple[int, int]]:
-    """Single-document wrapper over the batched vector splitter."""
-    n = arr.shape[0]
-    _doc, starts, lens = _split_ascii_batch(
-        arr, np.zeros(1, dtype=np.int64), np.array([n], dtype=np.int64))
-    return list(zip(starts.tolist(), lens.tolist()))
 
 
 _IS_WS_TBL = np.zeros(256, dtype=bool)
@@ -683,144 +712,28 @@ def _split_cp_batch(
 
 
 def _split_nonascii_docs_byte_spans(
-    texts: list[bytes],
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, bytes, np.ndarray]:
-    """Batched codepoint-split of non-ASCII docs → per-doc BYTE spans.
+    blob: np.ndarray, off: np.ndarray, lens: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Batched codepoint split of documents → per-doc BYTE spans.
 
-    Returns ``(doc_idx, byte_start_global, byte_end_global, blob, doc_boff)``
-    where the offsets index ``blob`` = texts joined by a single NUL separator
-    and ``doc_boff[i]`` is document i's byte offset in the blob (the single
-    source of the separator arithmetic). The NUL is ASCII and non-continuation,
-    so the one-shot vectorized decode of the whole blob cannot merge sequences
-    across document boundaries; per-doc clamps in :func:`_split_cp_batch` keep
-    the separator itself out of every span."""
-    blob = b"\x00".join(texts)
-    cps, bpos = utf8_decode_buffer_pos(blob)
-    lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=len(texts))
-    doc_boff = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1] + 1, out=doc_boff[1:])  # +1 per NUL separator
+    ``blob`` holds the documents back to back (document i is ``lens[i]`` bytes
+    at ``off[i]``). They are copied into ``sep`` with one NUL between
+    neighbours; returns ``(doc_idx, byte_start, byte_end, sep)`` with the byte
+    offsets indexing ``sep``. The NUL is ASCII and non-continuation, so the
+    one-shot vectorized decode of ``sep`` cannot merge sequences across
+    document boundaries; per-doc clamps in :func:`_split_cp_batch` keep the
+    separator itself out of every span."""
+    doc_boff = off + np.arange(lens.shape[0], dtype=np.int64)  # +1 per NUL
     doc_bend = doc_boff + lens
+    sep = np.zeros(int(doc_bend[-1]), dtype=np.uint8)
+    sep[_run_mask(doc_boff, lens, sep.shape[0])] = blob
+    cps, bpos = utf8_decode_buffer_pos(sep)
     cp_off = np.searchsorted(bpos, doc_boff)
     cp_end = np.searchsorted(bpos, doc_bend)
     doc_all, st_loc, ln_cp = _split_cp_batch(cps, cp_off, cp_end)
-    bpos_ext = np.concatenate([bpos, [len(blob)]])
+    bpos_ext = np.concatenate([bpos, [sep.shape[0]]])
     g0 = cp_off[doc_all] + st_loc
-    gs = bpos_ext[g0]
-    ge = bpos_ext[g0 + ln_cp]
-    return doc_all, gs, ge, blob, doc_boff
-
-
-def split_sentences_batch(texts: list[bytes]) -> list[list[tuple[int, int]]]:
-    """Batched :func:`split_sentences` — ONE vectorized pass over the pure-ASCII
-    documents (byte automaton) and ONE over the non-ASCII documents (codepoint
-    automaton). This is the Arrow-batch hot path: numpy overhead amortizes
-    across the batch; output is span-identical to the scalar automaton."""
-    out: list[list[tuple[int, int]] | None] = [None] * len(texts)
-    ascii_ids: list[int] = []
-    ascii_texts: list[bytes] = []
-    na_ids: list[int] = []
-    na_texts: list[bytes] = []
-    for i, t in enumerate(texts):
-        if not t:
-            out[i] = []
-        elif (np.frombuffer(t, dtype=np.uint8) & 0x80).any():
-            na_ids.append(i)
-            na_texts.append(t)
-        else:
-            ascii_ids.append(i)
-            ascii_texts.append(t)
-    if na_texts:
-        doc_all, gs, ge, _blob, boff = _split_nonascii_docs_byte_spans(na_texts)
-        cuts = np.searchsorted(doc_all, np.arange(len(na_ids) + 1))
-        st_rel = (gs - boff[doc_all]).tolist()
-        ln_l = (ge - gs).tolist()
-        for j, gi in enumerate(na_ids):
-            lo, hi = cuts[j], cuts[j + 1]
-            out[gi] = list(zip(st_rel[lo:hi], ln_l[lo:hi]))
-    if ascii_texts:
-        arr = np.frombuffer(b"".join(ascii_texts), dtype=np.uint8)
-        lens = np.fromiter((len(t) for t in ascii_texts), dtype=np.int64,
-                           count=len(ascii_texts))
-        offsets = np.zeros(len(lens), dtype=np.int64)
-        np.cumsum(lens[:-1], out=offsets[1:])
-        doc_all, st_all, ln_all = _split_ascii_batch(arr, offsets, offsets + lens)
-        cuts = np.searchsorted(doc_all, np.arange(len(ascii_ids) + 1))
-        st_l, ln_l = st_all.tolist(), ln_all.tolist()
-        for j, gi in enumerate(ascii_ids):
-            lo, hi = cuts[j], cuts[j + 1]
-            out[gi] = list(zip(st_l[lo:hi], ln_l[lo:hi]))
-    return out  # type: ignore[return-value]
-
-
-def _split_sentences_scalar(text: bytes) -> list[tuple[int, int]]:
-    """Scalar automaton — the executable spec; handles all inputs incl. non-ASCII."""
-    out: list[tuple[int, int]] = []
-    n = len(text)
-    if n == 0:
-        return out
-    ss = _skip_white_space(text, 0, n)
-    cur = ss
-    while cur < n:
-        b0 = text[cur]
-        if b0 < 0x80:
-            m = _EVENT_RE.search(text, cur, n)
-            if m is None:
-                cur = n
-                break
-            cur = m.start()
-            b0 = text[cur]
-            if b0 < 0x80:  # one of . ! ?
-                term_end = cur + 1
-                while term_end < n and text[term_end] == b0:
-                    term_end += 1
-                after = _skip_closing_punct(text, term_end, n)
-                ws = _skip_white_space(text, after, n)
-                split_here = False
-                if after >= n:
-                    split_here = True
-                elif ws > after:
-                    if b0 == 0x2E:  # '.'
-                        if not _should_block_split_on_dot(text, ss, cur, ws, n):
-                            split_here = True
-                    else:
-                        split_here = True
-                if split_here:
-                    if after > ss:
-                        out.append((ss, after - ss))
-                    ss = ws
-                    cur = ss
-                else:
-                    cur = ws if ws > after else after
-                continue
-        # non-ASCII byte: CJK fast paths then general decode
-        if (
-            b0 == 0xE3 and cur + 2 < n
-            and text[cur + 1] == 0x80 and text[cur + 2] == 0x82
-        ):  # 。
-            adv, split_here = 3, True
-        elif (
-            b0 == 0xEF and cur + 2 < n
-            and text[cur + 1] == 0xBC and text[cur + 2] in (0x9F, 0x81)
-        ):  # ？ ！
-            adv, split_here = 3, True
-        else:
-            cp, adv, invalid = utf8_decode_advance(text, cur, n)
-            if invalid:  # wrapper returns 0 → cursor++ (src/sentence_splitter.c:366-369)
-                cur += 1
-                continue
-            split_here = cp in _IMMEDIATE_TERMINATORS
-        nxt = cur + adv
-        if split_here:
-            after = _skip_closing_punct(text, nxt, n)
-            if after > ss:
-                out.append((ss, after - ss))
-            ss = _skip_white_space(text, after, n)
-            cur = ss
-            continue
-        cur = nxt
-    if cur > ss:
-        out.append((ss, cur - ss))
-    return out
+    return doc_all, bpos_ext[g0], bpos_ext[g0 + ln_cp], sep
 
 
 # ---------------------------------------------------------------------------
@@ -910,28 +823,12 @@ def fnv1a(data: bytes) -> int:
     return h
 
 
-def fnv1a_many(units: list[bytes]) -> np.ndarray:
-    """Vectorized FNV-1a over a batch of byte strings → uint64 array.
-
-    Vectorizes across units (one numpy pass per byte position), which is fast when
-    unit lengths are bounded (sentences). Matches :func:`fnv1a` bit-for-bit.
-    """
-    m = len(units)
-    if m == 0:
-        return np.empty(0, dtype=np.uint64)
-    lengths = np.fromiter((len(u) for u in units), dtype=np.int64, count=m)
-    if lengths.max(initial=0) == 0:
-        return np.full(m, np.uint64(FNV_OFFSET), dtype=np.uint64)
-    blob = np.frombuffer(b"".join(units), dtype=np.uint8)
-    offsets = np.zeros(m, dtype=np.int64)
-    np.cumsum(lengths[:-1], out=offsets[1:])
-    return _fnv1a_core(blob, offsets, lengths)
-
-
 def fnv1a_flat(values: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """FNV-1a over flat (values, offsets) buffers — the zero-boxing companion of
-    :func:`extract_units_batch_flat` (no per-unit bytes objects). Bit-identical
-    to :func:`fnv1a` per unit."""
+    """FNV-1a over flat (values, offsets) unit buffers, such as those of
+    :func:`extract_units_batch_flat_arrow` (no per-unit bytes objects).
+    Bit-identical to :func:`fnv1a` per unit. Vectorizes across units (one
+    numpy pass per byte position), which is fast when unit lengths are
+    bounded (sentences)."""
     m = len(offsets) - 1
     if m == 0:
         return np.empty(0, dtype=np.uint64)
@@ -1166,139 +1063,42 @@ def extract_units(raw: bytes, mode: str = "sentence", max_length: int = 0) -> li
     return units
 
 
-# every byte <= 0x20 → space: the composition of the newline squash (Q1) and the
-# whitespace CLASS of the normalizer — byte classes (terminator/closer/alpha/ws)
-# are preserved, so sentence spans computed on the translated text are identical
-_WS_TO_SPACE = bytes(0x20 if b <= 0x20 else b for b in range(256))
-
-
-def extract_units_batch(
-    texts: list[bytes], mode: str = "sentence", max_length: int = 0
-) -> list[list[bytes]]:
-    """Batched :func:`extract_units` — the Arrow-batch hot path (bit-identical output).
-
-    Two batch-level optimizations over the per-doc pipeline:
-    1. sentence spans come from ONE vectorized pass over the whole batch
-       (:func:`split_sentences_batch`);
-    2. normalization (trim + collapse ws runs — src/text_utils.c:7-34) is done by
-       translating ALL bytes <= 0x20 to space once per document (one C pass) and then
-       ``b" ".join(span.split())`` per span — C-speed, no per-span regex. The
-       translate maps every whitespace-class byte to 0x20 without changing any byte's
-       class, so spans and normalized unit bytes are unchanged.
-    """
-    if mode != "sentence":
-        return [extract_units(t, mode, max_length) for t in texts]
-    out: list[list[bytes] | None] = [None] * len(texts)
-    ascii_ids: list[int] = []
-    ascii_texts: list[bytes] = []
-    na_ids: list[int] = []
-    na_texts: list[bytes] = []
-    for i, t in enumerate(texts):
-        tt = t.translate(_WS_TO_SPACE)
-        if not tt:
-            out[i] = []
-        elif (np.frombuffer(tt, dtype=np.uint8) & 0x80).any():
-            na_ids.append(i)
-            na_texts.append(tt)
-        else:
-            ascii_ids.append(i)
-            ascii_texts.append(tt)
-    if na_texts:
-        # batched codepoint split (spans identical to the scalar automaton);
-        # per-span normalization shares the translate trick with the ASCII path
-        doc_all, gs, ge, nblob, _boff = _split_nonascii_docs_byte_spans(na_texts)
-        cuts = np.searchsorted(doc_all, np.arange(len(na_ids) + 1))
-        gs_l, ge_l = gs.tolist(), ge.tolist()
-        for j, gi in enumerate(na_ids):
-            units = []
-            for k in range(cuts[j], cuts[j + 1]):
-                u = b" ".join(nblob[gs_l[k]:ge_l[k]].split())
-                if max_length:
-                    u = u[:max_length]
-                if u:
-                    units.append(u)
-            out[gi] = units
-    if not ascii_texts:
-        return out  # type: ignore[return-value]
-    blob = b"".join(ascii_texts)
-    arr = np.frombuffer(blob, dtype=np.uint8)
-    lens = np.fromiter((len(t) for t in ascii_texts), dtype=np.int64,
-                       count=len(ascii_texts))
-    offsets = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=offsets[1:])
-    doc_all, st_loc, ln_all = _split_ascii_batch(arr, offsets, offsets + lens)
-    gs = st_loc + offsets[doc_all]
-    ge = gs + ln_all
-    # a span is already normalized ("clean") iff it has no interior double space and
-    # no trailing space (span starts are non-ws by construction; after the translate
-    # every ws byte is 0x20) — clean spans slice straight out of the blob
-    sp = arr == 0x20
-    dbl = np.flatnonzero(sp[:-1] & sp[1:])
-    dirty = (np.searchsorted(dbl, gs) != np.searchsorted(dbl, ge - 1)) \
-        | sp[np.maximum(ge - 1, 0)]
-    cuts = np.searchsorted(doc_all, np.arange(len(ascii_ids) + 1)).tolist()
-    gs_l = gs.tolist()
-    ge_l = ge.tolist()
-    dirty_l = dirty.tolist()
-    for j, gi in enumerate(ascii_ids):
-        units = []
-        for k in range(cuts[j], cuts[j + 1]):
-            u = blob[gs_l[k]:ge_l[k]]
-            if dirty_l[k]:
-                u = b" ".join(u.split())
-            if max_length and len(u) > max_length:
-                u = u[:max_length]
-            if u:
-                units.append(u)
-        out[gi] = units
-    return out  # type: ignore[return-value]
-
-
 def _run_mask(starts: np.ndarray, lens: np.ndarray, n: int) -> np.ndarray:
     """Boolean mask marking the disjoint runs ``[starts[i], starts[i]+lens[i])``
     over an array of length ``n``. Runs must be sorted and non-overlapping
-    (adjacent is fine: the +1 at a start cancels the -1 at the previous end,
-    which merges the runs — byte order is unchanged). int8 cumsum is safe
-    because disjointness keeps the running value in {0, 1}."""
-    d = np.zeros(n + 1, dtype=np.int8)
-    np.add.at(d, starts, 1)
-    np.subtract.at(d, starts + lens, 1)
-    return np.cumsum(d[:-1], dtype=np.int8).view(np.bool_)
+    (adjacent and empty runs are fine). One ``np.repeat`` of alternating
+    False/True over the gap and run lengths: a single memory-speed pass."""
+    ends = starts + lens
+    counts = np.empty(2 * starts.shape[0] + 1, dtype=np.int64)
+    counts[0:-1:2] = starts - np.concatenate(([0], ends[:-1]))
+    counts[1::2] = lens
+    counts[-1] = n - (ends[-1] if ends.size else 0)
+    return np.repeat(np.arange(counts.shape[0]) % 2 == 1, counts)
 
 
 def _assemble_units(
-    arr: np.ndarray, blob: bytes | None, doc_all: np.ndarray, gs: np.ndarray,
-    ge: np.ndarray, batch_ids: list[int], max_length: int,
+    arr: np.ndarray, doc_all: np.ndarray, gs: np.ndarray, ge: np.ndarray,
+    batch_ids: np.ndarray, max_length: int,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Spans → normalized flat unit buffers (shared by the ASCII and UTF-8
-    batch paths of :func:`extract_units_batch_flat`).
+    """Spans → normalized flat unit buffers (the last step of every branch of
+    :func:`extract_units_batch_flat_arrow`).
 
-    ``arr``/``blob`` hold whitespace-translated text (every byte <= 0x20 is a
+    ``arr`` holds whitespace-translated text (every byte <= 0x20 is a
     space), ``gs``/``ge`` are global byte spans, ``doc_all`` indexes
     ``batch_ids``. Clean spans (no interior double space, no leading or
     trailing space) copy verbatim via one ragged gather; dirty spans
-    re-normalize individually. (Sentence spans never start with whitespace;
-    the leading check exists for the full-document spans of the
-    line/paragraph/document modes.) ``blob`` may be None (the Arrow
-    zero-boxing path): dirty spans then slice from ``arr`` directly —
-    boxing only the dirty minority instead of every document."""
+    re-normalize individually, boxing only that minority. (Sentence spans
+    never start with whitespace; the leading check exists for the
+    full-document spans of the line/paragraph/document modes.)"""
     sp = arr == 0x20
     dbl = np.flatnonzero(sp[:-1] & sp[1:])
     dirty = (np.searchsorted(dbl, gs) != np.searchsorted(dbl, ge - 1)) \
         | sp[np.maximum(ge - 1, 0)] | sp[np.minimum(gs, sp.shape[0] - 1)]
     out_lens = (ge - gs).copy()
     dirty_ids = np.flatnonzero(dirty)
-    dirty_bytes: list[bytes] = []
-    gs_l = gs[dirty_ids].tolist()
-    ge_l = ge[dirty_ids].tolist()
-    if blob is None:
-        for a, b in zip(gs_l, ge_l):
-            u = b" ".join(arr[a:b].tobytes().split())
-            dirty_bytes.append(u)
-    else:
-        for a, b in zip(gs_l, ge_l):
-            u = b" ".join(blob[a:b].split())
-            dirty_bytes.append(u)
+    dirty_bytes = [b" ".join(arr[a:b].tobytes().split())
+                   for a, b in zip(gs[dirty_ids].tolist(),
+                                   ge[dirty_ids].tolist())]
     if dirty_ids.size:
         out_lens[dirty_ids] = np.fromiter(
             (len(u) for u in dirty_bytes), dtype=np.int64,
@@ -1311,9 +1111,7 @@ def _assemble_units(
             doc_all[keep], gs[keep], ge[keep], dirty[keep], out_lens[keep])
         dirty_bytes = [u for j, u in zip(dirty_ids, dirty_bytes)
                        if keep[j]]
-        dirty_ids = np.flatnonzero(dirty)
-    else:
-        dirty_ids = np.flatnonzero(dirty)
+    dirty_ids = np.flatnonzero(dirty)
     n_units = doc_all.shape[0]
     offsets = np.zeros(n_units + 1, dtype=np.int64)
     np.cumsum(out_lens, out=offsets[1:])
@@ -1349,17 +1147,14 @@ def _assemble_units(
     cuts = np.searchsorted(doc_all, np.arange(len(batch_ids) + 1))
     unit_idx = np.arange(n_units, dtype=np.int64) - np.repeat(
         cuts[:-1], np.diff(cuts))
-    doc_idx = np.asarray(batch_ids, dtype=np.int64)[doc_all]
-    return doc_idx, unit_idx, values, offsets
+    return batch_ids[doc_all], unit_idx, values, offsets
 
 
 def _concat_flat_parts(
     parts: list[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]],
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Merge (doc_idx, unit_idx, values, offsets) flat-unit parts into one,
-    rebasing each subsequent part's offsets onto the growing value buffer.
-    Shared by the list and Arrow batch extractors, which must stay
-    bit-identical."""
+    rebasing each subsequent part's offsets onto the growing value buffer."""
     if len(parts) == 1:
         return parts[0]
     doc_idx = np.concatenate([p[0] for p in parts])
@@ -1373,150 +1168,65 @@ def _concat_flat_parts(
     return doc_idx, unit_idx, values, np.concatenate(offsets)
 
 
-def extract_units_batch_flat(
-    texts: list[bytes], mode: str = "sentence", max_length: int = 0
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Flat, zero-boxing variant of :func:`extract_units_batch`.
-
-    Returns ``(doc_idx, unit_idx, values, offsets)``: unit k's bytes are
-    ``values[offsets[k]:offsets[k+1]]``, belonging to document ``doc_idx[k]`` at
-    in-document position ``unit_idx[k]``. Row content is bit-identical to
-    ``extract_units_batch`` (same kernels); ROW ORDER groups the pure-ASCII
-    documents first, then the non-ASCII documents (both fully vectorized —
-    ASCII over bytes, the rest over decoded codepoints) — downstream consumers
-    are order-free relational operators, and the per-doc (doc_idx, unit_idx)
-    pairs are identical.
-
-    The point: the list-of-lists API materializes one Python bytes object per
-    unit (~14M objects for 500k web docs) just so Arrow can re-serialize them;
-    this variant assembles the Arrow-ready value/offset buffers directly with
-    one vectorized ragged gather for the clean spans (dirty spans — interior
-    double spaces or a trailing space — are normalized individually, typically
-    a small minority)."""
-    if mode != "sentence":
-        if mode not in ("line", "paragraph", "document"):
-            raise ValueError(f"unknown mode: {mode!r}")
-        # After the reference's read-time newline squash (Q1,
-        # src/io_utils.c:68-88) no \n/\r bytes remain, so line and paragraph
-        # splitting DEGENERATE to one whole-document span (the U2 degeneracy
-        # quirk) — identical to document mode. One full-doc span per doc
-        # through the shared vectorized assembler; all-space docs normalize
-        # to empty and drop (P1/P2). Scalar parity pinned by hypothesis
-        # tests (batch ≡ extract_units per doc, all modes).
-        tts = [t.translate(_WS_TO_SPACE) for t in texts]
-        lens_all = np.fromiter(map(len, tts), dtype=np.int64, count=len(tts))
-        ne = np.flatnonzero(lens_all > 0)
-        if not ne.size:
-            z = np.empty(0, dtype=np.int64)
-            return z, z.copy(), np.empty(0, dtype=np.uint8), np.zeros(
-                1, np.int64)
-        blob = b"".join(tts)
-        arr = np.frombuffer(blob, dtype=np.uint8)
-        starts_all = np.zeros(len(tts), dtype=np.int64)
-        np.cumsum(lens_all[:-1], out=starts_all[1:])
-        gs = starts_all[ne]
-        return _assemble_units(arr, blob, np.arange(ne.size, dtype=np.int64),
-                               gs, gs + lens_all[ne], ne.tolist(), max_length)
-    tts = [t.translate(_WS_TO_SPACE) for t in texts]
-    lens_all = np.fromiter(map(len, tts), dtype=np.int64, count=len(tts))
-    ne = np.flatnonzero(lens_all > 0)
-    if ne.size:
-        # ASCII/non-ASCII classification in ONE pass over the concatenated
-        # bytes (bitwise-OR per doc segment), replacing a per-doc
-        # frombuffer+any round-trip
-        blob_all = b"".join(tts)
-        arr_all = np.frombuffer(blob_all, dtype=np.uint8)
-        starts_all = np.zeros(len(tts), dtype=np.int64)
-        np.cumsum(lens_all[:-1], out=starts_all[1:])
-        hi = (np.bitwise_or.reduceat(arr_all, starts_all[ne]) & 0x80) > 0
-    else:
-        hi = np.empty(0, dtype=bool)
-    ascii_ids = ne[~hi].tolist()
-    ascii_texts = [tts[i] for i in ascii_ids]
-    na_ids = ne[hi].tolist()
-    na_texts = [tts[i] for i in na_ids]
-
-    parts: list[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = []
-    if ascii_texts:
-        blob = b"".join(ascii_texts)
-        arr = np.frombuffer(blob, dtype=np.uint8)
-        lens = np.fromiter((len(t) for t in ascii_texts), dtype=np.int64,
-                           count=len(ascii_texts))
-        doc_off = np.zeros(len(lens), dtype=np.int64)
-        np.cumsum(lens[:-1], out=doc_off[1:])
-        doc_all, st_loc, ln_all = _split_ascii_batch(arr, doc_off, doc_off + lens)
-        gs = st_loc + doc_off[doc_all]
-        parts.append(_assemble_units(
-            arr, blob, doc_all, gs, gs + ln_all, ascii_ids, max_length))
-    if na_texts:
-        # non-ASCII docs: batched codepoint split (same translate trick — every
-        # byte <= 0x20 is already a space, so byte-level normalization below is
-        # valid, and the translate changes no span: whitespace-class and
-        # letter-class membership are preserved byte-for-byte)
-        doc_all, gs, ge, blob, _boff = _split_nonascii_docs_byte_spans(na_texts)
-        arr = np.frombuffer(blob, dtype=np.uint8)
-        parts.append(_assemble_units(
-            arr, blob, doc_all, gs, ge, na_ids, max_length))
-    if not parts:
-        z = np.empty(0, dtype=np.int64)
-        return z, z.copy(), np.empty(0, dtype=np.uint8), np.zeros(1, np.int64)
-    return _concat_flat_parts(parts)
-
-
-# vectorized form of _WS_TO_SPACE: one uint8 LUT gather translates a whole
-# Arrow value buffer in a single memory-speed pass (vs per-doc bytes.translate)
-_WS_LUT = np.frombuffer(_WS_TO_SPACE, dtype=np.uint8)
-
-
 def extract_units_batch_flat_arrow(
     arr: np.ndarray, starts: np.ndarray, ends: np.ndarray,
     mode: str = "sentence", max_length: int = 0,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Zero-boxing variant of :func:`extract_units_batch_flat` over Arrow
-    binary-array buffers: ``arr`` is the uint8 view of the value buffer and
-    ``starts``/``ends`` are per-document [start, end) byte bounds (a null
-    document is passed as an empty span). Bit-identical rows to the list API
-    (same kernels downstream); row order groups ASCII docs first, as there.
+    """The batched unit pipeline, over Arrow binary-array buffers: ``arr`` is
+    the uint8 view of the value buffer and ``starts``/``ends`` are
+    per-document [start, end) byte bounds (a null document is passed as an
+    empty span; see ``functions.udfs._binary_view``).
 
-    The list API boxes one Python bytes object per document (``to_pylist``),
-    translates each individually, and re-joins them into a blob; this variant
-    never materializes a per-document object on the hot path — whitespace
-    translation is one LUT gather, the per-class blob is one ragged
-    mask-to-mask copy, and only the non-ASCII minority (which needs the
-    codepoint decode) is boxed per document.
+    Returns ``(doc_idx, unit_idx, values, offsets)``: unit k's bytes are
+    ``values[offsets[k]:offsets[k+1]]``, belonging to document ``doc_idx[k]``
+    at in-document position ``unit_idx[k]``. Each document's units are those
+    of the scalar spec :func:`extract_units` (property-tested). ROW ORDER
+    groups the pure-ASCII documents first, then the non-ASCII ones, each in
+    document order.
+
+    No Python object is made per document or per clean unit: whitespace
+    translation is one pass over one copy of each run of adjacent documents,
+    ASCII documents split in one vectorized pass over bytes, non-ASCII ones in
+    one pass over decoded codepoints, and clean spans reach the value buffer
+    through one ragged mask-to-mask copy.
     """
-    if mode not in ("sentence", "line", "paragraph", "document"):
+    if mode not in MODES:
         raise ValueError(f"unknown mode: {mode!r}")
     arr = np.asarray(arr, dtype=np.uint8)
     starts = np.asarray(starts, dtype=np.int64)
     ends = np.asarray(ends, dtype=np.int64)
-    lens_all = ends - starts
-    ne = np.flatnonzero(lens_all > 0)
+    ne = np.flatnonzero(ends > starts)
     empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
              np.empty(0, dtype=np.uint8), np.zeros(1, np.int64))
     if not ne.size:
         return empty
 
     def compact(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Gather docs ``ids`` into one contiguous translated blob (ragged
-        mask-to-mask copy — no per-doc objects). Returns (blob_arr, off, lens).
-        """
-        c_lens = lens_all[ids]
+        """Docs ``ids`` as one contiguous translated blob, copied as one slice
+        per run of docs adjacent in the buffer (an Arrow value buffer is a
+        single run unless docs are skipped). Returns (blob, off, lens)."""
+        c_starts, c_ends = starts[ids], ends[ids]
+        c_lens = c_ends - c_starts
         off = np.zeros(ids.size, dtype=np.int64)
         np.cumsum(c_lens[:-1], out=off[1:])
-        total = int(off[-1] + c_lens[-1])
-        out = np.empty(total, dtype=np.uint8)
-        out[_run_mask(off, c_lens, total)] = arr[
-            _run_mask(starts[ids], c_lens, arr.shape[0])]
-        return _WS_LUT[out], off, c_lens
+        brk = np.flatnonzero(c_starts[1:] != c_ends[:-1]) + 1
+        lo = c_starts[np.concatenate([[0], brk])].tolist()
+        hi = c_ends[np.concatenate([brk - 1, [ids.size - 1]])].tolist()
+        blob = np.concatenate([arr[a:b] for a, b in zip(lo, hi)])
+        # every byte <= 0x20 → space: the newline squash (Q1) composed with
+        # the normalizer's whitespace class. Byte classes (terminator, closer,
+        # letter, whitespace) are unchanged, so spans are too.
+        np.maximum(blob, 0x20, out=blob)
+        return blob, off, c_lens
 
     if mode != "sentence":
-        # line/paragraph degenerate to document mode post-squash (quirk U2);
-        # one full-doc span per nonempty doc through the shared assembler
-        blob_arr, off, c_lens = compact(ne)
-        return _assemble_units(blob_arr, None,
-                               np.arange(ne.size, dtype=np.int64),
-                               off, off + c_lens, ne.tolist(), max_length)
+        # After the reference's read-time newline squash (Q1,
+        # src/io_utils.c:68-88) no \n/\r bytes remain, so line and paragraph
+        # splitting degenerate to one whole-document span (quirk U2), exactly
+        # like document mode; all-space docs normalize to empty and drop.
+        blob, off, c_lens = compact(ne)
+        return _assemble_units(blob, np.arange(ne.size, dtype=np.int64),
+                               off, off + c_lens, ne, max_length)
 
     # ASCII classification without boxing: bitwise-OR reduceat over per-doc
     # segments of the raw buffer. Segments span from each nonempty doc's start
@@ -1524,29 +1234,20 @@ def extract_units_batch_flat_arrow(
     # slot with residual buffer bytes can only widen a segment, which may only
     # flip a doc to the non-ASCII path — safe, that path handles ASCII too).
     last_end = int(ends[ne[-1]])
-    hi = (np.bitwise_or.reduceat(arr[:last_end], starts[ne]) & 0x80) > 0
-    ascii_ids = ne[~hi]
-    na_ids = ne[hi]
+    non_ascii = (np.bitwise_or.reduceat(arr[:last_end], starts[ne]) & 0x80) > 0
+    ascii_ids = ne[~non_ascii]
+    na_ids = ne[non_ascii]
 
     parts: list[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = []
     if ascii_ids.size:
-        blob_arr, off, c_lens = compact(ascii_ids)
-        doc_all, st_loc, ln_all = _split_ascii_batch(blob_arr, off,
-                                                     off + c_lens)
+        blob, off, c_lens = compact(ascii_ids)
+        doc_all, st_loc, ln_all = _split_ascii_batch(blob, off, off + c_lens)
         gs = st_loc + off[doc_all]
-        parts.append(_assemble_units(blob_arr, None, doc_all, gs, gs + ln_all,
-                                     ascii_ids.tolist(), max_length))
+        parts.append(_assemble_units(blob, doc_all, gs, gs + ln_all,
+                                     ascii_ids, max_length))
     if na_ids.size:
-        # the codepoint decode needs per-doc boundaries through a NUL-joined
-        # blob; boxing just this minority preserves the list-path code exactly
-        na_texts = [arr[s:e].tobytes().translate(_WS_TO_SPACE)
-                    for s, e in zip(starts[na_ids].tolist(),
-                                    ends[na_ids].tolist())]
-        doc_all, gs, ge, blob, _boff = _split_nonascii_docs_byte_spans(
-            na_texts)
-        parts.append(_assemble_units(np.frombuffer(blob, dtype=np.uint8),
-                                     blob, doc_all, gs, ge, na_ids.tolist(),
+        doc_all, gs, ge, sep = _split_nonascii_docs_byte_spans(
+            *compact(na_ids))
+        parts.append(_assemble_units(sep, doc_all, gs, ge, na_ids,
                                      max_length))
-    if not parts:
-        return empty
     return _concat_flat_parts(parts)

@@ -120,12 +120,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         # label path already shed in r5 (00588d4). toArrow() ships the edge
         # list as two columnar buffers; the union-find needs plain Python
         # values either way, so to_pylist() is the only per-edge Python cost.
-        try:
-            tbl = e.toArrow()
-            pairs = list(zip(tbl.column(0).to_pylist(),
-                             tbl.column(1).to_pylist()))
-        except AttributeError:  # pre-4.0 Spark: fall back to Row collect
-            pairs = [(r[0], r[1]) for r in e.collect()]
+        tbl = e.toArrow()
+        pairs = list(zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()))
         return _driver_union_find(pairs, e.sparkSession,
                                   e.schema["src"].dataType)
 

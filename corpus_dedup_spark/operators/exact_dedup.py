@@ -18,30 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _binary_view(col):
-    """Arrow string/binary Array → (values uint8 ndarray, starts, ends) without
-    boxing a single document: zero-copy views of the value and offset buffers.
-    Null slots are returned as empty spans (start == end)."""
-    import numpy as np
-    import pyarrow as pa
-
-    if pa.types.is_string(col.type):
-        col = col.cast(pa.binary())
-    elif pa.types.is_large_string(col.type):
-        col = col.cast(pa.large_binary())
-    off_dtype = (np.int64 if pa.types.is_large_binary(col.type)
-                 else np.int32)
-    bufs = col.buffers()
-    offs = np.frombuffer(bufs[1], dtype=off_dtype)[
-        col.offset:col.offset + len(col) + 1].astype(np.int64)
-    arr = (np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None
-           else np.empty(0, dtype=np.uint8))
-    starts, ends = offs[:-1], offs[1:]
-    if col.null_count:
-        valid = col.is_valid().to_numpy(zero_copy_only=False)
-        ends = np.where(valid, ends, starts)
-    return arr, starts, ends
+from corpus_dedup_spark.functions.udfs import _binary_array, _binary_view
 
 
 def explode_units_arrow(pages: DataFrame, mode: str = "sentence",
@@ -59,7 +36,6 @@ def explode_units_arrow(pages: DataFrame, mode: str = "sentence",
     (rows leave the worker already flat), and the id column is carried by a C++
     ``take`` gather. Unit bytes are those of the scalar spec
     :func:`kernel.extract_units`."""
-    import numpy as np
     import pyarrow as pa
 
     from corpus_dedup_spark import kernel
@@ -70,17 +46,8 @@ def explode_units_arrow(pages: DataFrame, mode: str = "sentence",
             doc_idx, unit_idx, values, offsets = (
                 kernel.extract_units_batch_flat_arrow(
                     arr, starts, ends, mode, max_length))
-            n = len(doc_idx)
-            if offsets[-1] >= (1 << 31):  # not assert: must survive python -O
-                raise ValueError(
-                    "Arrow batch unit bytes exceed int32 offsets "
-                    f"({int(offsets[-1])} bytes); lower "
-                    "spark.sql.execution.arrow.maxRecordsPerBatch")
+            units = _binary_array(values, offsets)
             ids = rb.column(id_col).take(pa.array(doc_idx, type=pa.int64()))
-            units = pa.Array.from_buffers(
-                pa.binary(), n,
-                [None, pa.py_buffer(offsets.astype(np.int32)),
-                 pa.py_buffer(values)])
             yield pa.RecordBatch.from_arrays(
                 [ids, pa.array(unit_idx, type=pa.int64()), units],
                 names=[id_col, "unit_idx", "norm_unit"])
@@ -131,7 +98,8 @@ def dedup_keepers(units: DataFrame, id_col: str = "url") -> DataFrame:
     ties a cheap header compare before the variable-length bytes). Redundant
     for grouping (norm_unit determines its length), free to compute, and
     measured weakly positive (~2-5% at 200k docs / 8 cores under storm —
-    scripts/exp_exact_conf.py 'lenkey'); rows stay bit-identical.
+    'lenkey' in the one-off scripts/exp_exact_conf.py, since deleted; measure
+    anew with ``python3 perfbench/run.py --trace 1``); rows stay bit-identical.
     """
     return (
         units.withColumn("_h", F.xxhash64("norm_unit"))

@@ -1,7 +1,7 @@
 """MinHash + LSH near-duplicate detection (north-rule core: H5/H6/J4/J5).
 
 Pipeline: units → shingle-hash sets → batched MinHash signatures (vectorized numpy in
-pandas UDFs) → band hashes → explode → bucket self-join (candidates) → exact shingle-set
+Arrow UDFs) → band hashes → explode → bucket self-join (candidates) → exact shingle-set
 Jaccard verify (never trust hashes alone — quirk Q6 generalized) → edges.
 
 Scale design:
@@ -30,7 +30,7 @@ from corpus_dedup_spark.config import DedupConfig
 
 def doc_features(pages: DataFrame, cfg: DedupConfig, id_col: str = "url",
                  text_col: str = "text") -> DataFrame:
-    """pages → (id, shingles, sig) in ONE fused pandas-UDF pass (extraction +
+    """pages → (id, shingles, sig) in ONE fused Arrow-UDF pass (extraction +
     shingling + batched MinHash share a single Arrow round-trip).
 
     Columns are pruned to (id, text) first so scans never read html/binary payloads.

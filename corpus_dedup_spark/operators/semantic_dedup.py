@@ -52,6 +52,10 @@ def semantic_dedup(vectors: DataFrame, threshold: float,
     the expected cell at TARGET_CELL_SIZE and the per-cell join at ~10⁶
     pairs regardless of corpus size (the paper's K ≈ N/10⁴ shape). Passing
     an explicit K is honored unchanged (the oracle replay pins one).
+
+    Note: with ``n_centroids=None`` this function is not lazy. It runs one
+    eager ``vectors.count()`` Spark job when called, before the returned
+    DataFrame is used. Pass an explicit K to build the plan without a job.
     """
     if n_centroids is None:
         n = vectors.count()

@@ -84,11 +84,12 @@ def build_session(
         # norm-unit bytes (quirk Q6 — content is the key), and web text
         # compresses ~2x better under zstd than lz4 for similar CPU.
         # Alternated best-of-N A/B at 200k docs / 8 cores
-        # (scripts/exp_exact_conf.py, 6 JVMs per variant): lz4 7.12 s best /
-        # zstd 5.44-5.57 s (-22%). Compression fully OFF is another ~4%
-        # on THIS host (no network, tmpfs shuffle) but indefensible on a
-        # real cluster where shuffle crosses the wire — zstd is the
-        # production choice and the bench config.
+        # (one-off scripts/exp_exact_conf.py, since deleted; 6 JVMs per
+        # variant; measure anew with `python3 perfbench/run.py --trace 1`):
+        # lz4 7.12 s best / zstd 5.44-5.57 s (-22%). Compression fully OFF
+        # is another ~4% on a single box (no network, tmpfs shuffle) but
+        # indefensible on a real cluster where shuffle crosses the wire —
+        # zstd is the production choice and the bench config.
         .config("spark.io.compression.codec", "zstd")
         # local mode runs every task thread in the driver JVM: size the heap for
         # 32 concurrent partial-agg hashmaps (8g thrashes GC at high core counts)

@@ -13,6 +13,7 @@ from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -20,6 +21,7 @@ from pyspark.sql.types import (BinaryType, LongType, StringType, StructField,
                                StructType)
 
 from corpus_dedup_spark import kernel
+from corpus_dedup_spark.functions.udfs import _binary_view
 
 SKETCH_BITS = 8192  # linear counter width (1 KB of state per host)
 
@@ -57,16 +59,15 @@ def _update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
         bitmap = np.zeros(SKETCH_BITS // 8, dtype=np.uint8)
 
     for pdf in pdfs:
-        for text in pdf["text"]:
-            raw = (text or "").encode("utf-8")
-            units = kernel.extract_units(raw)
-            n_docs += 1
-            n_units += len(units)
-            n_bytes += len(raw)
-            if units:
-                h = kernel.fnv1a_many(units) % np.uint64(SKETCH_BITS)
-                np.bitwise_or.at(bitmap, (h // 8).astype(np.int64),
-                                 (np.uint8(1) << (h % 8).astype(np.uint8)))
+        arr, starts, ends = _binary_view(pa.array(pdf["text"], type=pa.string()))
+        _d, _u, values, offsets = kernel.extract_units_batch_flat_arrow(
+            arr, starts, ends)
+        n_docs += len(pdf)
+        n_units += len(offsets) - 1
+        n_bytes += int((ends - starts).sum())
+        h = kernel.fnv1a_flat(values, offsets) % np.uint64(SKETCH_BITS)
+        np.bitwise_or.at(bitmap, (h // 8).astype(np.int64),
+                         (np.uint8(1) << (h % 8).astype(np.uint8)))
 
     state.update((n_docs, n_units, n_bytes, bitmap.tobytes()))
     yield pd.DataFrame({

@@ -79,7 +79,8 @@ def test_extract_units_deterministic_and_normalized(data):
 @given(st.lists(st.binary(max_size=60), max_size=30))
 @settings(max_examples=150)
 def test_fnv_vectorized_matches_scalar(units):
-    vec = kernel.fnv1a_many(units)
+    offsets = np.cumsum([0] + [len(u) for u in units])
+    vec = kernel.fnv1a_flat(np.frombuffer(b"".join(units), np.uint8), offsets)
     assert [int(v) for v in vec] == [kernel.fnv1a(u) for u in units]
 
 
@@ -99,8 +100,31 @@ def test_window_hash_equals_direct_horner(data, a, b):
 
 
 # ---------------------------------------------------------------------------
-# Batched fast paths ≡ scalar automaton (the r2 vectorization contract)
+# The one batched extractor ≡ the scalar spec, per document
 # ---------------------------------------------------------------------------
+
+def _assert_batch_matches_spec(docs, arrow_type, mode="sentence",
+                               max_length=0, lead=0):
+    """Run ``kernel.extract_units_batch_flat_arrow`` on ``docs`` (str or bytes,
+    None for a NULL row) as one Arrow array and compare every document's
+    units with ``kernel.extract_units``. ``lead`` padding rows are sliced off
+    the front, so the array has a non-zero Arrow offset."""
+    import pyarrow as pa
+
+    from corpus_dedup_spark.functions.udfs import _binary_view
+
+    pad = "pad. lead" if arrow_type == pa.string() else b"pad. lead"
+    col = pa.array([pad] * lead + docs, type=arrow_type).slice(lead)
+    d, u, v, o = kernel.extract_units_batch_flat_arrow(
+        *_binary_view(col), mode, max_length)
+    got = [[] for _ in docs]
+    for k in np.lexsort((u, d)).tolist():
+        assert u[k] == len(got[d[k]])  # unit_idx is the in-document position
+        got[d[k]].append(bytes(v[o[k]:o[k + 1]]))
+    raw = [t.encode("utf-8") if isinstance(t, str) else (t or b"")
+           for t in docs]
+    assert got == [kernel.extract_units(t, mode, max_length) for t in raw]
+
 
 # mixes ASCII terminator/closer/abbrev soup with CJK terminators and invalid bytes
 _splitter_soup = st.lists(
@@ -114,20 +138,15 @@ _splitter_soup = st.lists(
 ).map(b"".join)
 
 
-@given(st.lists(_splitter_soup, max_size=12))
-@settings(max_examples=200, deadline=None)
-def test_split_sentences_batch_matches_scalar(texts):
-    sq = [kernel.squash_newlines(t) for t in texts]
-    assert kernel.split_sentences_batch(sq) == \
-        [kernel._split_sentences_scalar(t) for t in sq]
-
-
 @given(st.lists(_splitter_soup, max_size=12),
        st.sampled_from([0, 5, 64]))
 @settings(max_examples=200, deadline=None)
 def test_extract_units_batch_matches_scalar(texts, max_length):
-    assert kernel.extract_units_batch(texts, "sentence", max_length) == \
-        [kernel.extract_units(t, "sentence", max_length) for t in texts]
+    """Splitter soup with invalid bytes: the sentence spans of both splitters
+    agree, checked through the units they produce."""
+    import pyarrow as pa
+
+    _assert_batch_matches_spec(texts, pa.binary(), "sentence", max_length)
 
 
 @given(texty)
@@ -161,17 +180,10 @@ def test_utf8_decode_vec_matches_scalar_advance(data):
 @given(st.lists(st.text(min_size=0, max_size=120), min_size=0, max_size=12),
        st.sampled_from([0, 5, 40]))
 def test_extract_units_batch_flat_matches_lists(texts, max_length):
-    """Flat (Arrow-buffer) extraction ≡ list-of-lists extraction, any input."""
-    raw = [t.encode("utf-8") for t in texts]
-    ref = kernel.extract_units_batch(raw, "sentence", max_length)
-    d, u, v, o = kernel.extract_units_batch_flat(raw, "sentence", max_length)
-    got = {}
-    for k in range(len(d)):
-        got.setdefault(int(d[k]), []).append((int(u[k]), bytes(v[o[k]:o[k + 1]])))
-    for i, units in enumerate(ref):
-        mine = [b for _, b in sorted(got.get(i, []))]
-        assert mine == units
-    assert sum(len(x) for x in ref) == len(d)
+    """Any Unicode text, sentence mode, through an Arrow string array."""
+    import pyarrow as pa
+
+    _assert_batch_matches_spec(texts, pa.string(), "sentence", max_length)
 
 
 @settings(max_examples=60, deadline=None)
@@ -180,20 +192,11 @@ def test_extract_units_batch_flat_matches_lists(texts, max_length):
        st.sampled_from([0, 5, 40]))
 def test_extract_units_batch_flat_nonsentence_matches_scalar(
         texts, mode, max_length):
-    """Non-sentence modes in the flat batch path ≡ the scalar extract_units
-    per doc (incl. the U2 degeneracy: post-squash, line/paragraph collapse to
-    one whole-document unit)."""
-    raw = [t.encode("utf-8") for t in texts]
-    ref = [kernel.extract_units(t, mode, max_length) for t in raw]
-    d, u, v, o = kernel.extract_units_batch_flat(raw, mode, max_length)
-    got = {}
-    for k in range(len(d)):
-        got.setdefault(int(d[k]), []).append(
-            (int(u[k]), bytes(v[o[k]:o[k + 1]])))
-    for i, units in enumerate(ref):
-        mine = [b for _, b in sorted(got.get(i, []))]
-        assert mine == units
-    assert sum(len(x) for x in ref) == len(d)
+    """Non-sentence modes (incl. the U2 degeneracy: post-squash,
+    line/paragraph collapse to one whole-document unit)."""
+    import pyarrow as pa
+
+    _assert_batch_matches_spec(texts, pa.string(), mode, max_length)
 
 
 @settings(max_examples=60, deadline=None)
@@ -204,26 +207,40 @@ def test_extract_units_batch_flat_nonsentence_matches_scalar(
        st.integers(0, 3))
 def test_extract_units_batch_flat_arrow_matches_lists(
         texts, mode, max_length, lead):
-    """Arrow-buffer (zero-boxing) extraction ≡ list extraction on ANY input:
-    nulls → empty docs, sliced arrays (non-zero Arrow offset), non-ASCII,
-    dirty spans. This is the exact path explode_units_arrow runs per batch."""
+    """NULL rows (empty documents) and sliced arrays (non-zero Arrow
+    offset), as Spark hands them to the UDFs."""
     import pyarrow as pa
 
-    from corpus_dedup_spark.operators.exact_dedup import _binary_view
+    _assert_batch_matches_spec(texts, pa.string(), mode, max_length, lead)
 
-    col = pa.array(["pad. lead"] * lead + texts, type=pa.string()).slice(lead)
-    arr, starts, ends = _binary_view(col)
-    got = kernel.extract_units_batch_flat_arrow(arr, starts, ends, mode,
-                                                max_length)
-    raw = [(t or "").encode("utf-8") for t in texts]
-    ref = kernel.extract_units_batch_flat(raw, mode, max_length)
 
-    def rows(r):
-        d, u, v, o = r
-        return sorted((int(d[k]), int(u[k]), bytes(v[o[k]:o[k + 1]]))
-                      for k in range(len(d)))
+def test_large_docs_batch_matches_scalar():
+    """Documents of 8 KB and more — ASCII, and mixed with CJK terminators and
+    invalid bytes — interleaved with NULL, empty and short non-ASCII rows in
+    one Arrow array."""
+    import random
 
-    assert rows(got) == rows(ref)
+    import pyarrow as pa
+
+    rng = random.Random(11)
+    ascii_words = [b"mr.", b"Dr.", b"etc.", b"st.", b"a.b", b"word", b"Next",
+                   b"x", b"ok!", b"why?", b"(so.)", b"'end.'", b"...", b"e.g."]
+    other = [w.encode() for w in ("。", "！", "文字", "д", "é.", "…", "»",
+                                  "\u3000")] + [b"\xff", b"\xc3"]  # invalid
+
+    def doc(vocab):
+        out = []
+        while sum(map(len, out)) < 8192 + rng.randrange(8192):
+            out += [rng.choice(vocab),
+                    rng.choice([b" ", b" ", b"  ", b". ", b"\n", b"\t"])]
+        return b"".join(out)
+
+    docs = [doc(ascii_words), None, doc(ascii_words + other), b"",
+            "café. \u3002".encode(), doc(ascii_words),
+            doc(ascii_words + other), None, "д. ok".encode(), doc(ascii_words)]
+    assert max(len(d) for d in docs if d) >= 8192
+    for max_length in (0, 40):
+        _assert_batch_matches_spec(docs, pa.binary(), "sentence", max_length)
 
 
 # ---------------------------------------------------------------------------
@@ -275,20 +292,13 @@ _UNI_ALPHABET = st.sampled_from(
        st.sampled_from([0, 7]))
 @settings(max_examples=300, deadline=None)
 def test_unicode_dense_batch_matches_scalar(texts, max_length):
+    import pyarrow as pa
+
     raw = [t.encode("utf-8") for t in texts]
     # inject invalid bytes deterministically
     raw = [b"\x80" + t + b"\xc3" if i % 3 == 0 else t
            for i, t in enumerate(raw)]
-    assert kernel.extract_units_batch(raw, "sentence", max_length) == \
-        [kernel.extract_units(t, "sentence", max_length) for t in raw]
-    d, u, v, o = kernel.extract_units_batch_flat(raw, "sentence", max_length)
-    got = {}
-    for k in range(len(d)):
-        got.setdefault(int(d[k]), []).append((int(u[k]), bytes(v[o[k]:o[k + 1]])))
-    for i, units in enumerate(kernel.extract_units_batch(raw, "sentence",
-                                                         max_length)):
-        mine = [b for _, b in sorted(got.get(i, []))]
-        assert mine == units
+    _assert_batch_matches_spec(raw, pa.binary(), "sentence", max_length)
 
 
 # --- vectorized batch ops ≡ scalar oracles -------------------------------------

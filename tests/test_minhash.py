@@ -1,5 +1,6 @@
 """MinHash/LSH near-dup detection: exact-dup guarantee + planted-truth recall."""
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
@@ -16,6 +17,18 @@ from corpus_dedup_spark.sources.pages import pages_spark
 @pytest.fixture(scope="module")
 def cfg():
     return DedupConfig(jaccard_threshold=0.35)
+
+
+def _model_shingles(text, cfg):
+    """Model of a document's unit shingle set computed in the test process:
+    the scalar spec (kernel.extract_units, kernel.fnv1a) feeding the UDFs'
+    shingle combiner."""
+    from corpus_dedup_spark import kernel
+    from corpus_dedup_spark.functions.udfs import _shingle_hashes
+
+    units = kernel.extract_units((text or "").encode())
+    uh = np.array([kernel.fnv1a(u) for u in units], dtype=np.uint64)
+    return _shingle_hashes(uh, cfg.shingle_k)
 
 
 @pytest.fixture(scope="module")
@@ -57,15 +70,11 @@ def test_near_pairs_recall(spark, cfg, planted):
     below the LSH s-curve knee are out of contract — the ≥0.99 north-rule target
     is vs the REFERENCE's assignments, i.e. exact dups, covered by
     test_exact_pairs_recall_is_one)."""
-    from corpus_dedup_spark import kernel
-    from corpus_dedup_spark.functions.udfs import _shingle_hashes
-
     df, truth_pairs, _ = planted
     texts = {r["url"]: r["text"] for r in df.select("url", "text").collect()}
 
     def shingles(url):
-        uh = kernel.fnv1a_many(kernel.extract_units(texts[url].encode()))
-        return set(_shingle_hashes(uh, cfg.shingle_k).tolist())
+        return set(_model_shingles(texts[url], cfg).tolist())
 
     near = truth_pairs[truth_pairs["kind"] == "near"]
     eligible = []
@@ -81,6 +90,33 @@ def test_near_pairs_recall(spark, cfg, planted):
     hit = sum(p in got for p in eligible)
     recall = hit / len(eligible)
     assert recall >= 0.99, f"near-dup recall {recall:.3f} ({hit}/{len(eligible)})"
+
+
+def test_feature_udfs_match_scalar_model(spark, cfg):
+    """The Arrow feature UDFs on NULL, non-ASCII and ASCII rows give the
+    scalar model's packed shingle blob, signature and band hashes."""
+    from corpus_dedup_spark.functions.udfs import (
+        _band_hashes_from_sig_matrix, _oph_signatures_from_shingle_sets,
+        _perm_params)
+
+    rows = [("a", "One sentence here. Two sentences here. Third one now."),
+            ("null", None),
+            ("zh", "这是第一句。这是第二句！还有第三句？最后一句。"),
+            ("mixed", "Ça va? Très bien. Пока, друг. Мир!  Done…  end"),
+            ("b", "Short doc.")]
+    df = spark.createDataFrame(rows, "url string, text string")
+    band_feats = {r["url"]: r for r in doc_band_features(df, cfg).collect()}
+    sigs = {r["url"]: r["sig"] for r in doc_features(df, cfg).collect()}
+    a, b = _perm_params(cfg)
+    for url, text in rows:
+        model = _model_shingles(text, cfg)
+        assert bytes(band_feats[url]["shingles"]) == model.tobytes(), url
+        sig = _oph_signatures_from_shingle_sets([model], a[0], b[0],
+                                                cfg.num_perm)
+        assert bytes(sigs[url]) == sig.tobytes(), url
+        bands = _band_hashes_from_sig_matrix(sig.view(np.uint64),
+                                             cfg.lsh_bands, cfg.lsh_rows)
+        assert list(band_feats[url]["bands"]) == bands[0].tolist(), url
 
 
 def test_clusters_cover_exact_groups(spark, cfg, planted):
